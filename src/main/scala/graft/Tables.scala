@@ -18,10 +18,13 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Session config every entry point uses. 32 shuffle partitions matches
-    * local[32]; at cluster scale this is AQE-advised instead.
+  /** Session config every entry point uses: `local[cpus]` with as many
+    * shuffle partitions, `cpus` defaulting to the machine's cores
+    * (`SPARK_GRAFT_CPUS` overrides); at cluster scale partitioning is
+    * AQE-advised instead.
     */
-  def session(appName: String, cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession = {
+  def session(appName: String, cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)

@@ -65,8 +65,11 @@ object DebeziumAdapter {
     * downstream operators key on; `before`/`after` stay dynamic maps for
     * the catalog's evolved schemas to type. */
   def fromDebezium(src: DataFrame): DataFrame =
-    src
-      .select(from_json(col("value").cast("string"), valueSchema).as("v"))
+    changeRows(src.select(from_json(col("value").cast("string"), valueSchema).as("v")))
+
+  /** [[fromDebezium]] over values already parsed into column `v`. */
+  private[graft] def changeRows(parsed: DataFrame): DataFrame =
+    parsed
       .select(col("v.payload.*"))
       .select(
         col("source.name").as("cluster_name"),
@@ -178,8 +181,12 @@ object DebeziumAdapter {
     * statement with the coordinates the catalog records ALTER intervals
     * at. Control-plane frame — one row per DDL, never data-scaled. */
   def fromSchemaChange(src: DataFrame): DataFrame =
-    src
-      .select(from_json(col("value").cast("string"), schemaChangeSchema).as("v"))
+    schemaChangeRows(src.select(
+      from_json(col("value").cast("string"), schemaChangeSchema).as("v")))
+
+  /** [[fromSchemaChange]] over values already parsed into column `v`. */
+  private[graft] def schemaChangeRows(parsed: DataFrame): DataFrame =
+    parsed
       .select(col("v.payload.*"))
       .filter(col("ddl").isNotNull)
       .select(

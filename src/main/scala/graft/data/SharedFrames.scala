@@ -41,18 +41,24 @@ object SharedFrames {
 
   /** Wall-clock seconds each memo entry's compute thunk took, keyed by
     * tag (summed when the same tag materializes for several inputs, e.g.
-    * two scale factors in one session). Diagnostics only — Bench prints
-    * this after its warmup pass so amortized medians stay auditable (the
-    * r14 verdict's memo-accounting rule: a memo added to a query moves
-    * its build cost into the untimed warmup, and that move must be
-    * visible in the bench output, not discovered by plan archaeology). */
+    * two scale factors in one session; reset by `clear()`). Diagnostics
+    * only — Bench prints this after its warmup pass so amortized medians
+    * stay auditable (the r14 verdict's memo-accounting rule: a memo added
+    * to a query moves its build cost into the untimed warmup, and that
+    * move must be visible in the bench output, not discovered by plan
+    * archaeology). */
   private val buildLog = TrieMap.empty[String, Double]
 
   private def logged[T](tag: String)(f: => T): T = {
     val t0 = System.nanoTime()
     val r = f
     val s = (System.nanoTime() - t0) / 1e9
-    buildLog.put(tag, buildLog.getOrElse(tag, 0.0) + s)
+    // CAS loop: two builds sharing a tag must not lose an increment
+    @annotation.tailrec def add(): Unit = buildLog.putIfAbsent(tag, s) match {
+      case Some(old) if !buildLog.replace(tag, old, old + s) => add()
+      case _ => ()
+    }
+    add()
     r
   }
 
@@ -193,5 +199,6 @@ object SharedFrames {
     }
     cache.clear()
     valueCache.clear()
+    buildLog.clear()
   }
 }

@@ -1,44 +1,44 @@
 package graft.streaming
 
-import graft.catalog.{SchemaCatalog, TableId}
+import graft.catalog.{SchemaCatalog, TableId, TableSchema}
 import graft.cdc.{CdcOps, CdcReplay, CdcSqlFragments, DebeziumAdapter}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-/** The streaming shape of the engine (SURVEY §3.1):
+/** The streaming shape of the engine (SURVEY §3.1). Both ingress paths —
+  * file replay ([[start]]) and the Debezium wire feed ([[startWire]]) —
+  * run ONE commit step per micro-batch, inside `foreachBatch` over the
+  * cached batch:
   *
   * {{{
-  * spark.readStream(cdc replay source)
-  *   → CdcReplay.fromEvents → admit(T2)            // declarative plan
-  *   → foreachBatch {                               // driver-side batch loop
-  *       route data vs DDL (T19)
-  *       DDL → SchemaCatalog.applyDdl (T20-T24; micro-batch boundary = the
-  *             reference's flush-barrier before schema changes)
-  *       data → whitelist/retarget/blacklist/explode (T3-T8)
-  *            → broadcast join against the catalog registry (T16-T18)
-  *            → envelope (T9-T15), repartition by topic + sort by pos_key
-  *              (strict per-topic order — SURVEY §7.4 risk 3)
-  *            → append parquet sink (T26)
-  *       state mirror: lastBatchId + catalog snapshot + per-topic offsets,
-  *       written atomically (T25/T27); batch replays are skipped by
-  *       batchId comparison — the reference's offset-dedupe (T31).
-  *     }
+  * 1. one control collect: DDL rows in position order, the distinct data
+  *    tables, the position maxima (T19 routing, T5/T27 position)
+  * 2. DDL barrier: SchemaCatalog.applyDdl in position order (T20-T24; the
+  *    reference's flush before a schema change), then afterDdlHook
+  * 3. typed frames (replay: T3-T18 chain → envelope, payload versions by
+  *    the catalog's ALTER intervals; wire: one projection per table and
+  *    catalog answer), each one partition per topic sorted by pos_key
+  *    (SURVEY §7.4 risk 3), appended into `.batch_<id>.staging` and
+  *    published by ONE rename to `batch=<id>` (T26)
+  * 4. state mirror: lastBatchId + catalog snapshot + position, written
+  *    atomically (T25/T27)
   * }}}
   *
   * Exactly-once: Spark's checkpoint replays an uncommitted batch after a
-  * crash. Two mechanisms make the replayed side effects idempotent:
-  * committed batches are skipped by the state mirror's batchId check
-  * (reference offset-dedupe, components/recovery_handler.py:160-168), and
-  * an UNcommitted batch (crash after the sink write, before saveState)
-  * re-OVERWRITES its own `batch=<id>` output directory rather than
-  * appending — so the parquet sink never holds duplicate rows. Catalog
-  * replay is idempotent too: the in-memory catalog dies with the crash,
-  * the restart restores the pre-batch snapshot, and fingerprint-keyed
-  * registration re-mints the same schema ids (proved by the mid-DDL crash
-  * test, mirroring reference failure_recovery_test.py:493+).
+  * crash. Committed batches are skipped by the state mirror's batchId
+  * check (reference offset-dedupe, components/recovery_handler.py:
+  * 160-168). An UNcommitted batch first clears its staging directory and
+  * any `batch=<id>` a crashed attempt published, then publishes again: the
+  * sink never holds duplicate rows, and a reader listing batch
+  * directories never sees a partly written one (the dot-prefixed staging
+  * directory is hidden from Spark/Hadoop listing). Catalog replay is
+  * idempotent too: the restart restores the pre-batch snapshot, and
+  * fingerprint-keyed registration re-mints the same schema ids (the
+  * mid-DDL crash tests, mirroring reference failure_recovery_test.py:493+).
   */
 object CdcPipeline {
 
@@ -226,99 +226,97 @@ object CdcPipeline {
         * idempotently to `snap=<batchId>`. */
       materializeDir: Option[String] = None): StreamingQuery = {
 
-    val catalog = new SchemaCatalog(piiTables = CdcSqlFragments.PII_TABLES.toSet)
-    val saved = loadState(stateDir)
-    saved.foreach(s => catalog.restore(s.catalogJson)) // T30 recovery
-    var lastCommitted = saved.map(_.lastBatchId).getOrElse(-1L)
-    var lastPosition = saved.map(_.position).getOrElse(Map.empty[String, String])
-
-    val stream = spark.readStream
-      .schema(replaySchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(replayDir)
-
-    // T37/T5 — metric node evaluated during the write job itself (no extra
-    // pass over the data): event/heartbeat counters, per-table message
-    // counts (fixed whitelist → one sum(when) each), and the heartbeat
-    // high-water timestamp the lag gauge derives from.
+    // T37/T5 — metric node evaluated during the batch's first job (no
+    // extra pass over the data): event/heartbeat counters, per-table
+    // message counts (fixed whitelist → one sum(when) each), and the
+    // heartbeat high-water timestamp the lag gauge derives from.
     val perTableCols = CdcSqlFragments.WHITELIST.map(t =>
       sum(when(col("kind") === "data" && col("base_table") === t, 1L)
         .otherwise(0L)).as(s"n_$t"))
-    val observeCols: Seq[org.apache.spark.sql.Column] = Seq(
+    val observeCols: Seq[Column] = Seq(
       count(lit(1)).as("events"),
       sum(when(col("kind") === "heartbeat", 1L).otherwise(0L)).as("heartbeats"),
       max(when(col("kind") === "heartbeat", col("ts_us"))).as("hb_max_ts_us")
     ) ++ perTableCols
 
-    val cdcStream = CdcOps.admit(CdcReplay.fromEvents(stream))
-      .observe("cdc", observeCols.head, observeCols.tail: _*)
+    // T3/T4/T7/T8 — the data rows the envelope is built from
+    def dataRows(cached: DataFrame): DataFrame =
+      CdcOps.blacklistFilter(CdcOps.retarget(CdcOps.whitelist(CdcOps.dataOnly(cached))))
 
-    withStreamLifecycle(spark, stateDir, onProgress = e => {
-      val m = e.progress.observedMetrics.get("cdc")
-      if (m != null) statsSink(BatchStats(
-        e.progress.batchId,
-        m.getAs[Long]("events"),
-        m.getAs[Long]("heartbeats"),
-        Option(m.getAs[java.lang.Long]("hb_max_ts_us")).map(_.longValue),
-        CdcSqlFragments.WHITELIST.map(t => t -> m.getAs[Long](s"n_$t")).toMap))
-    }) {
-      cdcStream.writeStream
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          if (batchId <= lastCommitted) {
-            // T31: replayed batch after restart — side effects already
-            // committed; skip (offset-dedupe parity).
-          } else {
-            val position = processBatch(spark, batch, batchId, catalog, outDir,
-              materializeDir)
-            lastPosition = mergePosition(lastPosition, position)
-            saveState(stateDir, batchId, catalog, clean = false, lastPosition)
-            lastCommitted = batchId
+    val replay = new Ingress {
+      override def stream(source: DataFrame): DataFrame =
+        CdcOps.admit(CdcReplay.fromEvents(source))
+          .observe("cdc", observeCols.head, observeCols.tail: _*)
+
+      // DDL (T19 routing) and the position mirror (T5/T27: the max binlog
+      // coordinate and the latest heartbeat beacon over every admitted
+      // event) in one pass, then the data tables to register
+      def control(cached: DataFrame): Seq[DataFrame] = {
+        val ddl = col("kind") === "ddl"
+        Seq(
+          controlRows(cached, when(ddl, "ddl").otherwise("pos"),
+            "cluster" -> when(ddl, CdcSqlFragments.CLUSTER),
+            "db" -> when(ddl, col("database_name")),
+            "name" -> when(ddl, expr(CdcSqlFragments.DDL_STMT)),
+            "at" -> when(ddl, col("event_id")),
+            "p" -> struct(col("log_file"), col("log_pos")),
+            "hb" -> when(col("kind") === "heartbeat", struct(col("event_id"), col("ts_us")))),
+          controlRows(dataRows(cached), lit("key"),
+            "cluster" -> lit(CdcSqlFragments.CLUSTER), "db" -> col("database_name"),
+            "name" -> col("target_table")))
+      }
+
+      def outputs(cached: DataFrame, catalog: SchemaCatalog, keys: Seq[DataKey],
+          typing: Seq[(DataKey, Seq[Typing])]): Seq[DataFrame] = {
+        // register unseen tables deterministically (keys arrive sorted),
+        // then broadcast the registry
+        keys.foreach { k =>
+          val id = TableId(k.cluster, k.db, k.table)
+          if (catalog.lookup(id).isEmpty) catalog.register(id, payloadStruct)
+        }
+        val regRows = catalog.all.toSeq.map { case (id, ts) =>
+          (id.database, id.table, ts.schemaId, ts.containsPii)
+        }
+        val reg = spark.createDataFrame(regRows)
+          .toDF("database_name", "target_table", "schema_id", "contains_pii")
+        val env0 = CdcOps.envelope(CdcOps.typeTransforms(CdcOps.images(
+          CdcOps.enrich(CdcOps.explodeRows(dataRows(cached)), reg))))
+
+        // T22b — the data plane follows the CATALOG's evolved schemas: the
+        // payload-version intervals come from the ALTER positions the
+        // catalog recorded while applying DDL (in this batch's barrier and
+        // in all prior batches — they ride the state snapshot through
+        // recovery), so an ALTER changes the payload column set from its
+        // binlog position onward. Interval construction is pure driver-
+        // side arithmetic on control-plane state; the data side takes one
+        // broadcast hash join.
+        import spark.implicits._
+        val intervals = catalog.alterEvents
+          .groupBy(h => (h._1.database, h._1.table))
+          .toSeq.flatMap { case ((db, tbl), es) =>
+            val at = es.map(_._2).sorted
+            at.zipWithIndex.map { case (from, idx) =>
+              (db, tbl, idx + 2L, from, at.lift(idx + 1)) }
           }
-          ()
-        }
-        .start()
-    }
-  }
+          .toDF("database_name", "base_table", "version", "from_id", "to_id")
+        Seq(CdcOps.evolvePayload(env0, intervals))
+      }
 
-  /** Shared [[start]]/[[startWire]] lifecycle: acquire the instance lock
-    * (T35) under a provisional token, install the termination listener
-    * (T34 clean-shutdown flag + lock release + progress fan-out), build
-    * the query, then swap the token for the real runId — but ONLY if we
-    * still hold the lock (never clobber a token another process placed).
-    * The check-then-write swap is safe because the provisional token is
-    * registered in heldTokens (same-JVM checkers see it live) and a
-    * cross-process steal requires this pid to be dead. Factored so a
-    * locking-protocol fix can never drift between the two entry points. */
-  private def withStreamLifecycle(
-      spark: SparkSession, stateDir: String,
-      onProgress: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent => Unit = _ => ())(
-      mk: => StreamingQuery): StreamingQuery = {
-    val token = java.util.UUID.randomUUID().toString
-    acquireLock(spark, stateDir, token)
-    @volatile var runId: String = token
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit =
-        if (e.progress.runId.toString == runId) onProgress(e)
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
-        if (e.runId.toString == runId) {
-          if (e.exception.isEmpty) markCleanShutdown(stateDir) // T34
-          releaseLock(stateDir, runId)
-          spark.streams.removeListener(this)
-        }
+      override val published: Option[(Long, Seq[DataFrame]) => Unit] =
+        materializeDir.map(dir => (batchId: Long, outs: Seq[DataFrame]) =>
+          materializeBatch(spark, outs.head, batchId, dir, outDir))
     }
-    spark.streams.addListener(listener)
-    val query = mk
-    runId = query.runId.toString
-    heldTokens.add(runId)
-    val f = lockFile(stateDir)
-    if (Files.exists(f) && Files.readString(f).trim == lockToken(token))
-      Files.writeString(f, lockToken(runId))
-    heldTokens.remove(token)
-    query
+
+    run(spark, replaySchema, replay, replayDir, outDir, checkpointDir, stateDir,
+      maxFilesPerTrigger, onProgress = e => {
+        val m = e.progress.observedMetrics.get("cdc")
+        if (m != null) statsSink(BatchStats(
+          e.progress.batchId,
+          m.getAs[Long]("events"),
+          m.getAs[Long]("heartbeats"),
+          Option(m.getAs[java.lang.Long]("hb_max_ts_us")).map(_.longValue),
+          CdcSqlFragments.WHITELIST.map(t => t -> m.getAs[Long](s"n_$t")).toMap))
+      })
   }
 
   /** Kafka-wire frame shape (what [[KafkaWire]] produces and a real broker
@@ -331,33 +329,25 @@ object CdcPipeline {
       StructField("key", StringType),
       StructField("value", BinaryType)))))))
 
-  /** Debezium-wire ingestion: the same micro-batch loop as [[start]],
-    * sourced from a Kafka-shaped stream carrying BOTH the connector's
-    * data topics (`<cluster>.<db>.<table>`) and its schema-change topic
-    * (named exactly `<cluster>` — Debezium's `topic.prefix` convention).
-    * A Kafka-sourced deployment needs no custom glue: per batch the
-    * schema-change statements and the data rows are interleaved on the
-    * PACKED BINLOG POSITION axis ([[graft.cdc.DebeziumAdapter.packedEventId]])
-    * — each data row types under the catalog state at its OWN position,
-    * with DDL applied between position segments (the T24 flush-barrier
-    * made real inside the batch: a row BEFORE an in-batch ALTER keeps
-    * the pre-ALTER column set and version, T22b parity with the replay
-    * path's intervals) — then written per-topic-ordered + idempotent,
-    * exactly like [[processBatch]]'s sink. Debezium delete TOMBSTONES
-    * (null Kafka value) are dropped by contract; unparseable records are
-    * quarantined under `topic=__unparsed`; rows for tables the
-    * schema-change topic has not yet created are quarantined under
-    * `topic=__unregistered` rather than dropped or guessed (the
-    * reference fetches SHOW CREATE on a cache miss — that needs a live
-    * MySQL, so the wire path records instead). State mirror (lastBatchId
-    * + catalog snapshot incl. ALTER positions + binlog position) and the
-    * batchId dedupe give the same crash/restart contract as [[start]];
-    * the catalog restore means a restarted consumer types replayed rows
-    * under the same schema versions (T22b/T30).
+  /** Debezium-wire ingestion through the same commit step as [[start]],
+    * from a Kafka-shaped stream carrying BOTH the connector's data topics
+    * (`<cluster>.<db>.<table>`) and its schema-change topic (named exactly
+    * `<cluster>` — Debezium's `topic.prefix` convention). Each data row
+    * types under the catalog at its OWN position on the packed binlog
+    * axis ([[graft.cdc.DebeziumAdapter.packedEventId]]): the DDL barrier
+    * records each table's catalog answer between consecutive statements,
+    * so a row before an in-batch ALTER keeps the pre-ALTER column set and
+    * version (T22b parity with replay's intervals), and a row before an
+    * in-batch CREATE or after a DROP is unregistered. Debezium delete
+    * TOMBSTONES (null Kafka value) are dropped by contract; unparseable
+    * records are quarantined under `topic=__unparsed`; rows for tables the
+    * schema-change topic has not created, under `topic=__unregistered`
+    * (the reference fetches SHOW CREATE on a miss — that needs a live
+    * MySQL, so the wire path records instead of guessing).
     *
-    * Scale: the per-table loop is control-plane-bounded (#tables in the
-    * batch); each table's projection is one narrow codegen'd pass, the
-    * sink repartition is the only shuffle (per-topic ordering contract).
+    * Scale: the projections are control-plane-bounded (#tables × #answers
+    * each), each one narrow codegen'd pass over the cached parse; the sink
+    * repartition is the only shuffle.
     */
   def startWire(
       spark: SparkSession,
@@ -367,162 +357,330 @@ object CdcPipeline {
       checkpointDir: String,
       stateDir: String,
       maxFilesPerTrigger: Int = 1): StreamingQuery = {
+    // the cached batch holds each frame's parse: `sc` on the
+    // schema-change topic, `dv` on the data topics. A data row needs
+    // identity AND coordinates to be typed — a null log_file/log_pos would
+    // give a null __pos no position range holds.
+    val schemaTopic = col("topic") === cluster
+    def changes(cached: DataFrame): DataFrame = DebeziumAdapter.schemaChangeRows(
+      cached.filter(col("schema_topic")).select(col("sc").as("v")))
+    def parsed(cached: DataFrame): DataFrame = DebeziumAdapter.changeRows(
+      cached.filter(!col("schema_topic")).select(col("dv").as("v")))
+    val wellFormed = col("database_name").isNotNull && col("table_name").isNotNull &&
+      col("log_file").isNotNull && col("log_pos").isNotNull
+    def data(cached: DataFrame): DataFrame = parsed(cached).filter(wellFormed)
+      .withColumn("__pos", DebeziumAdapter.packedEventId(col("log_file"), col("log_pos")))
+    val coord = struct(col("log_file"), col("log_pos"))
+
+    val wire = new Ingress {
+      // One scan, one JSON parse per frame. A null Kafka value on a data
+      // topic is a Debezium delete TOMBSTONE (compaction hint, no image,
+      // no coordinates) — dropped by contract, the delete event itself
+      // already carried the row.
+      override def prepare(batch: DataFrame): DataFrame = {
+        val json = col("value").cast("string")
+        batch.filter(schemaTopic || col("value").isNotNull).select(
+          schemaTopic.as("schema_topic"),
+          when(schemaTopic, from_json(json, DebeziumAdapter.schemaChangeSchema)).as("sc"),
+          when(!schemaTopic, from_json(json, DebeziumAdapter.valueSchema)).as("dv"))
+      }
+
+      // the position mirror is the max binlog coordinate across data AND
+      // schema-change events: a DDL-only batch still advances it, as the
+      // reference's QueryEvent handling does
+      def control(cached: DataFrame): Seq[DataFrame] = Seq(
+        controlRows(changes(cached), lit("ddl"),
+          "cluster" -> col("cluster_name"), "db" -> col("database_name"),
+          "name" -> col("ddl"), "at" -> col("event_id"), "p" -> coord),
+        controlRows(data(cached), lit("key"),
+          "cluster" -> lit(cluster), "db" -> col("database_name"),
+          "name" -> col("table_name"), "pos" -> col("__pos"), "p" -> coord))
+
+      // records whose payload does not parse (null db/table after
+      // from_json) write last and always, so even a DDL-only batch
+      // publishes its (empty) batch directory
+      def outputs(cached: DataFrame, catalog: SchemaCatalog, keys: Seq[DataKey],
+          typing: Seq[(DataKey, Seq[Typing])]): Seq[DataFrame] =
+        groupedUnions(typedProjections(data(cached), typing)) :+
+          quarantined(parsed(cached).filter(!wellFormed), "__unparsed")
+    }
+    run(spark, wireSchema, wire, wireDir, outDir, checkpointDir, stateDir, maxFilesPerTrigger)
+  }
+
+  // ---- the per-batch commit step both ingress paths share -------------
+
+  /** What one source contributes to [[commit]]: its streaming plan over
+    * the source files, the frame cached per batch, its [[controlRows]], the frames to publish
+    * after the DDL barrier, and an optional step after the publish (its
+    * frames are then persisted so the step does not recompute them). */
+  private trait Ingress {
+    def stream(source: DataFrame): DataFrame = source
+    def prepare(batch: DataFrame): DataFrame = batch
+    def control(cached: DataFrame): Seq[DataFrame]
+    def outputs(cached: DataFrame, catalog: SchemaCatalog, keys: Seq[DataKey],
+        typing: Seq[(DataKey, Seq[Typing])]): Seq[DataFrame]
+    val published: Option[(Long, Seq[DataFrame]) => Unit] = None
+  }
+
+  /** One DDL statement of a batch at its binlog position. */
+  private[graft] final case class Ddl(cluster: String, db: String, stmt: String, at: Long)
+
+  /** A data table present in a batch. `span` is the (min, max) position
+    * of its rows where rows type by position (wire); None where the
+    * catalog's ALTER intervals type them (replay). */
+  private[graft] final case class DataKey(cluster: String, db: String, table: String,
+      span: Option[(Long, Long)])
+
+  /** How a table's rows type over part of a batch: the catalog's schema
+    * and version there (None: not registered), and the [lo, hi) position
+    * ranges that answer holds over (Long.MinValue / Long.MaxValue: open). */
+  private[graft] final case class Typing(answer: Option[(TableSchema, Long)],
+      ranges: Seq[(Long, Long)])
+
+  /** The setup both entry points share: catalog restore (T30), the state
+    * mirror, the source stream, checkpoint and trigger, the batchId
+    * dedupe (T31) and the one `saveState` call site. Lifecycle: acquire
+    * the instance lock (T35) under a provisional token, install the
+    * termination listener (T34 clean-shutdown flag + lock release +
+    * progress fan-out), start the query, then swap the token for the real
+    * runId — but ONLY if we still hold the lock (never clobber a token
+    * another process placed). The check-then-write swap is safe because
+    * the provisional token is registered in heldTokens (same-JVM checkers
+    * see it live) and a cross-process steal requires this pid to be dead. */
+  private def run(spark: SparkSession, schema: StructType, src: Ingress, sourceDir: String,
+      outDir: String, checkpointDir: String, stateDir: String,
+      maxFilesPerTrigger: Int,
+      onProgress: StreamingQueryListener.QueryProgressEvent => Unit = _ => ()
+  ): StreamingQuery = {
     val catalog = new SchemaCatalog(piiTables = CdcSqlFragments.PII_TABLES.toSet)
     val saved = loadState(stateDir)
     saved.foreach(s => catalog.restore(s.catalogJson)) // T30 recovery
     var lastCommitted = saved.map(_.lastBatchId).getOrElse(-1L)
     var lastPosition = saved.map(_.position).getOrElse(Map.empty[String, String])
 
-    val stream = spark.readStream
-      .schema(wireSchema)
+    val stream = src.stream(spark.readStream
+      .schema(schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(wireDir)
+      .parquet(sourceDir))
 
-    val posKeyCol = concat_ws(":", col("log_file"),
-      lpad(col("log_pos").cast("string"), 10, "0"),
-      lpad(col("row_idx").cast("string"), 4, "0")).as("pos_key")
-
-    withStreamLifecycle(spark, stateDir) {
-      stream.writeStream
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          if (batchId <= lastCommitted) {
-            // T31: replayed batch after restart — already committed; skip.
-          } else {
-            val cached = batch.persist()
-            try {
-              // ---- schema-change events, collected in binlog order
-              // (control-plane-tiny: one row per DDL statement).
-              val changes = DebeziumAdapter.fromSchemaChange(
-                cached.filter(col("topic") === cluster))
-              val changeRows = changes
-                .select("cluster_name", "database_name", "ddl", "event_id")
-                .collect().sortBy(_.getLong(3))
-
-              // ---- data events. A null Kafka value is a Debezium delete
-              // TOMBSTONE (compaction hint, no image, no coordinates) —
-              // dropped by contract, the delete event itself already
-              // carried the row. Anything else must parse; records whose
-              // payload does not (null db/table after from_json) are
-              // QUARANTINED under topic=__unparsed rather than crashing
-              // the control-plane loop on unsortable null keys.
-              val parsed = DebeziumAdapter.fromDebezium(
-                cached.filter(col("topic") =!= cluster &&
-                  col("value").isNotNull)).persist()
-              try {
-                // a row needs identity AND coordinates to be typed: a
-                // null log_file/log_pos would give a null __pos that
-                // every position-segment filter silently drops
-                val wellFormed = col("database_name").isNotNull &&
-                  col("table_name").isNotNull &&
-                  col("log_file").isNotNull && col("log_pos").isNotNull
-                val data = parsed
-                  .filter(wellFormed)
-                  .withColumn("__pos", DebeziumAdapter.packedEventId(
-                    col("log_file"), col("log_pos")))
-                // delete carries its image in `before` (Debezium op 'd')
-                val img = when(col("message_type") === "delete",
-                  col("before")).otherwise(col("after"))
-                val meta = Seq(col("message_type"), col("log_file"),
-                  col("log_pos"), col("row_idx"), col("ts_us"),
-                  col("transaction_id"), posKeyCol)
-
-                // one control-plane pass per table present in a slice,
-                // typing the row image by the catalog's CURRENT per-table
-                // StructType (the reference's per-table handler shape)
-                def typedSlices(seg: DataFrame): Seq[((String, String), DataFrame)] =
-                  typedSlicesFor(catalog, cluster, seg, img, meta)
-
-                // ---- the T24 flush-barrier made REAL inside the batch:
-                // data rows type under the catalog state at THEIR OWN
-                // binlog position. Rows between consecutive DDL positions
-                // type first, then the DDL applies — so a row BEFORE an
-                // in-batch ALTER keeps the pre-ALTER column set and
-                // version (T22b), exactly like the replay path's
-                // per-position intervals. Segment count is #DDLs + 1
-                // (control-plane-bounded).
-                val outs = Seq.newBuilder[((String, String), DataFrame)]
-                var lower = Long.MinValue
-                changeRows.foreach { ch =>
-                  val at = ch.getLong(3)
-                  outs ++= typedSlices(data.filter(
-                    col("__pos") >= lower && col("__pos") < at))
-                  catalog.applyDdl(ch.getString(0), ch.getString(1),
-                    ch.getString(2), atEventId = at)
-                  lower = at
-                }
-                outs ++= typedSlices(data.filter(col("__pos") >= lower))
-                val quarantine = parsed
-                  .filter(!wellFormed)
-                  .select(Seq(
-                    lit("__unparsed").as("topic"),
-                    lit(-1).as("schema_id"),
-                    lit(false).as("contains_pii"),
-                    lit(0L).as("schema_version"),
-                    to_json(img).as("payload_json")) ++ meta: _*)
-
-                // ---- sharded sink (r8): plan/write per ≤25-table group
-                // instead of one all-tables union — Catalyst re-walking a
-                // single growing union made per-table plan cost 1.58× per
-                // table-count doubling (BENCH_wire r7); narrow per-group
-                // unions keep it flat. The N+1 group appends land in a
-                // DOT-PREFIXED staging dir (hidden from Spark/Hadoop file
-                // listing), then ONE rename publishes batch=<id> — so a
-                // concurrent reader listing batch directories never
-                // observes a partially-written batch (r8 ADVICE: the
-                // explicit delete+N-appends form had widened the
-                // visible-partial window from one write to N+1; rename on
-                // a local FS / HDFS is the atomic publish point). A
-                // replayed/crashed attempt may have left either dir, so
-                // both are cleared first. The quarantine slice writes last
-                // and unconditionally (possibly empty), so EVERY committed
-                // batch has its batch=<id> directory — the same sink
-                // contract as [[processBatch]]; a DDL-only batch writes an
-                // empty one.
-                val batchDir = s"$outDir/batch=$batchId"
-                val stageDir = s"$outDir/.batch_$batchId.staging"
-                val fs = new org.apache.hadoop.fs.Path(outDir)
-                  .getFileSystem(spark.sparkContext.hadoopConfiguration)
-                fs.delete(new org.apache.hadoop.fs.Path(stageDir), true)
-                fs.delete(new org.apache.hadoop.fs.Path(batchDir), true)
-                (groupedUnions(outs.result()) :+ quarantine).foreach { g =>
-                  g.repartition(col("topic"))
-                    .sortWithinPartitions("pos_key")
-                    .write.mode(SaveMode.Append)
-                    .parquet(stageDir)
-                }
-                if (!fs.rename(new org.apache.hadoop.fs.Path(stageDir),
-                    new org.apache.hadoop.fs.Path(batchDir)))
-                  throw new java.io.IOException(
-                    s"wire sink: failed to publish $stageDir -> $batchDir")
-
-                // ---- position mirror: the max binlog coordinate across
-                // data AND schema-change events (a DDL-only batch still
-                // advances the position, as the reference's QueryEvent
-                // handling does).
-                val posRow = data.select("log_file", "log_pos")
-                  .unionByName(changes.select("log_file", "log_pos"))
-                  .agg(max(struct(col("log_file"), col("log_pos"))).as("p"))
-                  .collect()(0)
-                val position =
-                  if (posRow.isNullAt(0)) Map.empty[String, String]
-                  else {
-                    val p = posRow.getStruct(0)
-                    graft.cdc.LogPosition(
-                      logPos = Some(p.getLong(1)), logFile = Some(p.getString(0)),
-                      offset = Some(0)).toDict
-                  }
-                lastPosition = mergePosition(lastPosition, position)
-                saveState(stateDir, batchId, catalog, clean = false, lastPosition)
-                lastCommitted = batchId
-              } finally parsed.unpersist()
-            } finally cached.unpersist()
-          }
-          ()
+    val token = java.util.UUID.randomUUID().toString
+    acquireLock(spark, stateDir, token)
+    @volatile var runId: String = token
+    spark.streams.addListener(new StreamingQueryListener {
+      import StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (e.progress.runId.toString == runId) onProgress(e)
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        if (e.runId.toString == runId) {
+          if (e.exception.isEmpty) markCleanShutdown(stateDir) // T34
+          releaseLock(stateDir, runId)
+          spark.streams.removeListener(this)
         }
-        .start()
+    })
+    val query = stream.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        // T31: a batch at or below lastCommitted is a replay after a
+        // restart whose side effects already committed — skip it
+        // (offset-dedupe parity)
+        if (batchId > lastCommitted) {
+          lastPosition = mergePosition(lastPosition,
+            commit(spark, src, batch, batchId, catalog, outDir))
+          saveState(stateDir, batchId, catalog, clean = false, lastPosition)
+          lastCommitted = batchId
+        }
+        ()
+      }
+      .start()
+    runId = query.runId.toString
+    heldTokens.add(runId)
+    val f = lockFile(stateDir)
+    if (Files.exists(f) && Files.readString(f).trim == lockToken(token))
+      Files.writeString(f, lockToken(runId))
+    heldTokens.remove(token)
+    query
+  }
+
+  /** One micro-batch: control collect, DDL barrier, typed frames, staged
+    * publish (see the object scaladoc). Returns the batch's position
+    * mirror (a [[graft.cdc.LogPosition]] dict) — what the reference
+    * persists as GlobalEventState.position. */
+  private def commit(spark: SparkSession, src: Ingress, batch: DataFrame,
+      batchId: Long, catalog: SchemaCatalog, outDir: String): Map[String, String] = {
+    val cached = src.prepare(batch).persist()
+    try {
+      val (ddls, keys, position) = collectControl(src.control(cached))
+      val typing = ddlBarrier(catalog, ddls, keys)
+      afterDdlHook(batchId)
+      val outs = src.outputs(cached, catalog, keys, typing)
+      src.published match {
+        case None => publish(spark, outDir, batchId, outs)
+        case Some(after) =>
+          outs.foreach(_.persist())
+          try {
+            publish(spark, outDir, batchId, outs)
+            after(batchId, outs)
+          } finally outs.foreach(_.unpersist())
+      }
+      position
+    } finally cached.unpersist()
+  }
+
+  /** Control rows, which every source unions into ONE aggregate — one
+    * driver collect per batch however many statements, tables and
+    * coordinates it holds. Kind `ddl`: name = statement, at = position;
+    * kind `key`: name = table, min/max of `pos` = its rows' span; `p`/`hb`:
+    * (log_file, log_pos) and heartbeat (serial, ts), maxed. */
+  private val controlSchema = StructType.fromDDL(
+    "kind STRING, cluster STRING, db STRING, name STRING, at BIGINT, pos BIGINT, " +
+      "p STRUCT<log_file: STRING, log_pos: BIGINT>, hb STRUCT<serial: BIGINT, ts_us: BIGINT>")
+
+  private def controlRows(df: DataFrame, kind: Column, cols: (String, Column)*): DataFrame = {
+    val set = cols.toMap + ("kind" -> kind)
+    df.select(controlSchema.fields.toIndexedSeq.map(f =>
+      set.getOrElse(f.name, lit(null)).cast(f.dataType).as(f.name)): _*)
+  }
+
+  /** DDL in position order, data tables sorted, and the position mirror
+    * — empty for a batch admit emptied, which [[mergePosition]] keeps as
+    * the previous position. */
+  private def collectControl(
+      rows: Seq[DataFrame]): (Seq[Ddl], Seq[DataKey], Map[String, String]) = {
+    val got = rows.reduce(_ unionByName _)
+      .groupBy("kind", "cluster", "db", "name", "at")
+      .agg(min("pos"), max("pos"), max("p"), max("hb"))
+      .collect().toSeq
+    val ddls = got.filter(_.getString(0) == "ddl")
+      .map(r => Ddl(r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
+      .sortBy(d => (d.at, d.stmt))
+    val keys = got.filter(_.getString(0) == "key")
+      .map(r => DataKey(r.getString(1), r.getString(2), r.getString(3),
+        if (r.isNullAt(5)) None else Some((r.getLong(5), r.getLong(6)))))
+      .sortBy(k => (k.db, k.table))
+    val p = got.flatMap(r => Option(r.getStruct(7))).filterNot(_.anyNull)
+      .map(s => (s.getString(0), s.getLong(1))).maxOption
+    val hb = got.flatMap(r => Option(r.getStruct(8))).filterNot(_.anyNull)
+      .map(s => (s.getLong(0), s.getLong(1))).maxOption
+    val position = p.fold(Map.empty[String, String]) { case (file, pos) =>
+      graft.cdc.LogPosition(
+        logPos = Some(pos), logFile = Some(file),
+        offset = Some(0), // batch boundaries are whole files
+        hbSerial = hb.map(_._1), hbTimestamp = hb.map(_._2)).toDict
     }
+    (ddls, keys, position)
+  }
+
+  /** The DDL barrier (T24): apply the batch's statements in position
+    * order. They cut the position axis into segments; just before each
+    * segment's closing statement (and after the last), record the
+    * catalog's answer for every key whose span reaches that segment.
+    * Returns each spanned key's answers with the ranges they hold over. */
+  private[graft] def ddlBarrier(catalog: SchemaCatalog, ddls: Seq[Ddl],
+      keys: Seq[DataKey]): Seq[(DataKey, Seq[Typing])] = {
+    val at = ddls.map(_.at).toIndexedSeq
+    def segOf(pos: Long) = at.count(_ <= pos)
+    def range(seg: Int) = (if (seg == 0) Long.MinValue else at(seg - 1),
+      if (seg == at.size) Long.MaxValue else at(seg))
+    val spanned = keys.flatMap(k => k.span.map { case (lo, hi) =>
+      (k, segOf(lo), segOf(hi), Vector.newBuilder[(Int, Option[(TableSchema, Long)])])
+    })
+    def record(seg: Int): Unit = {
+      lazy val alters = catalog.alterEvents.groupMapReduce(_._1)(_ => 1L)(_ + _)
+      spanned.foreach { case (k, first, last, seen) =>
+        if (first <= seg && seg <= last) {
+          val id = TableId(k.cluster, k.db, k.table)
+          seen += seg -> catalog.lookup(id).map(_ -> (1L + alters.getOrElse(id, 0L)))
+        }
+      }
+    }
+    ddls.zipWithIndex.foreach { case (d, seg) =>
+      record(seg)
+      catalog.applyDdl(d.cluster, d.db, d.stmt, atEventId = d.at)
+    }
+    record(ddls.size)
+    spanned.map { case (k, _, _, seen) =>
+      val segs = seen.result()
+      k -> segs.map(_._2).distinct.map { answer =>
+        // adjacent segments with the same answer merge into one range
+        val ranges = segs.collect { case (s, a) if a == answer => range(s) }
+          .foldLeft(Vector.empty[(Long, Long)]) {
+            case (acc :+ ((lo, hi)), (from, to)) if hi == from => acc :+ ((lo, to))
+            case (acc, r) => acc :+ r
+          }
+        Typing(answer, ranges)
+      }
+    }
+  }
+
+  /** Debezium row image: a delete carries its image in `before`. */
+  private val wireImage = when(col("message_type") === "delete", col("before"))
+    .otherwise(col("after"))
+
+  private val wireMeta = Seq(col("message_type"), col("log_file"),
+    col("log_pos"), col("row_idx"), col("ts_us"), col("transaction_id"),
+    concat_ws(":", col("log_file"),
+      lpad(col("log_pos").cast("string"), 10, "0"),
+      lpad(col("row_idx").cast("string"), 4, "0")).as("pos_key"))
+
+  /** The wire sink's row: envelope columns, then [[wireMeta]]. */
+  private def wireRows(rows: DataFrame, topic: String, schemaId: Int, pii: Boolean,
+      version: Long, payload: Column): DataFrame =
+    rows.select(Seq(lit(topic).as("topic"), lit(schemaId).as("schema_id"),
+      lit(pii).as("contains_pii"), lit(version).as("schema_version"),
+      payload.as("payload_json")) ++ wireMeta: _*)
+
+  private def quarantined(rows: DataFrame, topic: String): DataFrame =
+    wireRows(rows, topic, -1, pii = false, 0L, to_json(wireImage))
+
+  /** One projection per (table, catalog answer) of [[ddlBarrier]], keyed
+    * by table for [[groupedUnions]]: the row image cast to the answer's
+    * StructType (the reference's per-table handler shape), or
+    * `__unregistered` where the table is absent. [[graft.tools.WireRehearsal]]
+    * measures its plan-build cost at hundreds of tables. */
+  private[graft] def typedProjections(data: DataFrame,
+      typing: Seq[(DataKey, Seq[Typing])]): Seq[((String, String), DataFrame)] =
+    typing.flatMap { case (k, answers) =>
+      val rows = data.filter(col("database_name") === k.db &&
+        col("table_name") === k.table)
+      answers.map { t =>
+        val slice = if (answers.size == 1) rows else rows.filter(t.ranges.map {
+          case (lo, hi) =>
+            (if (lo == Long.MinValue) lit(true) else col("__pos") >= lo) &&
+              (if (hi == Long.MaxValue) lit(true) else col("__pos") < hi)
+        }.reduce(_ || _))
+        (k.db, k.table) -> (t.answer match {
+          case Some((ts, version)) =>
+            wireRows(slice, s"${k.db}.${k.table}", ts.schemaId, ts.containsPii, version,
+              to_json(struct(ts.struct.fields.toSeq.map(f =>
+                wireImage.getItem(f.name).cast(f.dataType).as(f.name)): _*)))
+          case None => quarantined(slice, "__unregistered")
+        })
+      }
+    }
+
+  /** T26 sink, one protocol for both sources: every frame is appended,
+    * one partition per topic sorted by pos_key, into a DOT-PREFIXED
+    * staging directory (hidden from Spark/Hadoop file listing); then ONE
+    * rename publishes `batch=<id>` — the atomic publish point on a local
+    * FS / HDFS, so a reader listing batch directories never observes a
+    * partly written batch. A replayed/crashed attempt may have left
+    * either directory, so both are cleared first. Every committed batch
+    * has its `batch=<id>` directory, empty for a DDL-only batch. */
+  private def publish(spark: SparkSession, outDir: String, batchId: Long,
+      frames: Seq[DataFrame]): Unit = {
+    val batchDir = new Path(s"$outDir/batch=$batchId")
+    val stageDir = new Path(s"$outDir/.batch_$batchId.staging")
+    val fs = batchDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(stageDir, true)
+    fs.delete(batchDir, true)
+    frames.foreach(_.repartition(col("topic"))
+      .sortWithinPartitions("pos_key")
+      .write.mode(SaveMode.Append)
+      .parquet(stageDir.toString))
+    if (!fs.rename(stageDir, batchDir))
+      throw new java.io.IOException(s"sink: failed to publish $stageDir -> $batchDir")
   }
 
   /** Tables per sink write-group in [[startWire]]: Catalyst plan-build
@@ -535,59 +693,12 @@ object CdcPipeline {
     * 100→200→400 by [[graft.tools.WireRehearsal]]). */
   private[graft] val WireTableGroupSize = 25
 
-  /** One typed projection per (db, table) present in `seg`, keyed by its
-    * table identity so [[groupedUnions]] can shard the sink writes, using
-    * the catalog's CURRENT per-table StructType — the reference's
-    * per-table handler shape, extracted from [[startWire]] so the
-    * wide-deployment rehearsal ([[graft.tools.WireRehearsal]]) can
-    * measure its plan-build cost at hundreds of tables without a live
-    * stream. The `present` collect is control-plane-bounded (#distinct
-    * tables in the batch slice).
-    */
-  private[graft] def typedSlicesFor(
-      catalog: SchemaCatalog,
-      cluster: String,
-      seg: DataFrame,
-      img: org.apache.spark.sql.Column,
-      meta: Seq[org.apache.spark.sql.Column]): Seq[((String, String), DataFrame)] = {
-    val present = seg.select("database_name", "table_name")
-      .distinct().collect()
-      .map(r => (r.getString(0), r.getString(1))).sorted
-    present.toSeq.map { case (db, tbl) =>
-      val slice = seg.filter(col("database_name") === db &&
-        col("table_name") === tbl)
-      val typed = catalog.lookup(TableId(cluster, db, tbl)) match {
-        case Some(ts) =>
-          val version = 1L + catalog.alterEvents.count(_._1 ==
-            TableId(cluster, db, tbl))
-          slice.select(Seq(
-            concat_ws(".", lit(db), lit(tbl)).as("topic"),
-            lit(ts.schemaId).as("schema_id"),
-            lit(ts.containsPii).as("contains_pii"),
-            lit(version).as("schema_version"),
-            to_json(struct(ts.struct.fields.toSeq.map(f =>
-              img.getItem(f.name).cast(f.dataType).as(f.name)): _*))
-              .as("payload_json")) ++ meta: _*)
-        case None =>
-          // never-created table: the reference fetches SHOW CREATE on a
-          // miss (needs live MySQL) — record, don't guess
-          slice.select(Seq(
-            lit("__unregistered").as("topic"),
-            lit(-1).as("schema_id"),
-            lit(false).as("contains_pii"),
-            lit(0L).as("schema_version"),
-            to_json(img).as("payload_json")) ++ meta: _*)
-      }
-      (db, tbl) -> typed
-    }
-  }
-
-  /** Shard table-keyed slices into unions of ≤ [[WireTableGroupSize]]
-    * tables each (a table's slices — one per DDL segment — always land in
-    * the same group, so every topic is written exactly once and its
-    * per-file pos_key ordering holds). Groups are independent by
-    * construction: the catalog barrier already applied each DDL while the
-    * slices were BUILT, so group write order carries no semantics. */
+  /** Shard table-keyed projections into unions of ≤ [[WireTableGroupSize]]
+    * tables each (a table's projections — one per catalog answer — always
+    * land in the same group, so every topic is written exactly once and
+    * its per-file pos_key ordering holds). Groups are independent by
+    * construction: the DDL barrier already fixed each projection's typing,
+    * so group write order carries no semantics. */
   private[graft] def groupedUnions(
       slices: Seq[((String, String), DataFrame)]): Seq[DataFrame] = {
     val tables = slices.map(_._1).distinct.sorted
@@ -622,107 +733,6 @@ object CdcPipeline {
       val h = if (hbSerial(next) >= hbSerial(prev)) next else prev
       c.filter(e => coordKeys(e._1)) ++ h.filter(e => hbKeys(e._1))
     }
-
-  /** Returns the batch's position mirror (a [[graft.cdc.LogPosition]]
-    * dict): the last (log_file, log_pos) of the batch plus the latest
-    * heartbeat beacon — what the reference persists as
-    * GlobalEventState.position. */
-  private def processBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
-      catalog: SchemaCatalog, outDir: String,
-      materializeDir: Option[String] = None): Map[String, String] = {
-    val cached = batch.persist()
-    try {
-      // ---- DDL branch (T19 routing; T24 barrier = this runs before the
-      // data branch of the SAME batch, after all prior batches committed).
-      val ddls = cached.filter(col("kind") === "ddl")
-        .withColumn("stmt", expr(CdcSqlFragments.DDL_STMT))
-        .select("event_id", "database_name", "stmt")
-        .collect() // DDL volume is control-plane-tiny by construction
-        .sortBy(_.getLong(0))
-      ddls.foreach { r =>
-        catalog.applyDdl(CdcSqlFragments.CLUSTER, r.getString(1), r.getString(2),
-          atEventId = r.getLong(0))
-      }
-      afterDdlHook(batchId)
-
-      // ---- heartbeat/position branch (T5/T27): one aggregate over the
-      // batch yields the position mirror — the max binlog coordinate and
-      // the latest heartbeat beacon (serial, timestamp).
-      val posRow = cached.agg(
-        max(struct(col("log_file"), col("log_pos"))).as("p"),
-        max(when(col("kind") === "heartbeat",
-          struct(col("event_id"), col("ts_us")))).as("hb"))
-        .collect()(0)
-      // an all-filtered batch (every event dropped by admit) moves no
-      // position: max() over zero rows is null → empty dict, which
-      // mergePosition keeps as the previous coordinate
-      val position =
-        if (posRow.isNullAt(0)) Map.empty[String, String]
-        else {
-          val p = posRow.getStruct(0)
-          val hb = Option(posRow.getStruct(1))
-          graft.cdc.LogPosition(
-            logPos = Some(p.getLong(1)), logFile = Some(p.getString(0)),
-            offset = Some(0), // batch boundaries are whole files
-            hbSerial = hb.map(_.getLong(0)), hbTimestamp = hb.map(_.getLong(1))).toDict
-        }
-
-      // ---- data branch
-      val data = CdcOps.blacklistFilter(CdcOps.retarget(CdcOps.whitelist(
-        CdcOps.dataOnly(cached))))
-
-      // register unseen tables deterministically (sorted), then broadcast
-      val tables = data.select("database_name", "target_table").distinct()
-        .collect().map(r => (r.getString(0), r.getString(1))).sorted
-      tables.foreach { case (db, tbl) =>
-        val id = TableId(CdcSqlFragments.CLUSTER, db, tbl)
-        if (catalog.lookup(id).isEmpty) catalog.register(id, payloadStruct)
-      }
-      val regRows = catalog.all.toSeq.map { case (id, ts) =>
-        (id.database, id.table, ts.schemaId, ts.containsPii)
-      }
-      val reg = spark.createDataFrame(regRows)
-        .toDF("database_name", "target_table", "schema_id", "contains_pii")
-
-      val env0 = CdcOps.envelope(CdcOps.typeTransforms(CdcOps.images(
-        CdcOps.enrich(CdcOps.explodeRows(data), reg))))
-
-      // T22b — the data plane follows the CATALOG's evolved schemas: the
-      // payload-version intervals come from the ALTER positions the
-      // catalog recorded while applying DDL (above and in all prior
-      // batches — they ride the state snapshot through recovery), so an
-      // ALTER changes the payload column set from its binlog position
-      // onward. Interval construction is pure driver-side arithmetic on
-      // control-plane state; the data side takes one broadcast hash join.
-      import spark.implicits._
-      val intervalRows = catalog.alterEvents
-        .groupBy(h => (h._1.database, h._1.table))
-        .toSeq.flatMap { case ((db, tbl), es) =>
-          val at = es.map(_._2).sorted
-          at.zipWithIndex.map { case (from, idx) =>
-            (db, tbl, idx + 2L, from, at.lift(idx + 1)) }
-        }
-      val intervals = intervalRows
-        .toDF("database_name", "base_table", "version", "from_id", "to_id")
-      val env = CdcOps.evolvePayload(env0, intervals)
-
-      // strict per-topic order on publish (single partition per topic —
-      // the same constraint Kafka's per-topic-partition ordering imposes).
-      // Idempotent sink: the batch OVERWRITES its own batch=<id> directory,
-      // so a crash-replay of an uncommitted batch cannot duplicate rows.
-      // persist when the envelope feeds both sinks — without it the whole
-      // T3-T15 transform chain runs twice per batch
-      if (materializeDir.nonEmpty) env.persist()
-      try {
-        env.repartition(col("topic"))
-          .sortWithinPartitions("pos_key")
-          .write.mode(SaveMode.Overwrite).parquet(s"$outDir/batch=$batchId")
-        materializeDir.foreach(dir =>
-          materializeBatch(spark, env, batchId, dir, outDir))
-      } finally if (materializeDir.nonEmpty) env.unpersist()
-      position
-    } finally cached.unpersist()
-  }
 
   /** Continuous t13b: merge the previous snapshot with this batch's
     * changes, latest image per row identity by pos_key. Delete tombstones
@@ -761,7 +771,7 @@ object CdcPipeline {
         // (materialization enabled mid-stream): their envelope rows live
         // in the batch=<id> dirs — fold them in so the first snapshot is
         // complete, not a silent suffix of the changelog
-        val prior = dirIds(spark, outDir, "batch=").filter(_ < batchId)
+        val prior = childDirs(spark, outDir, "batch=").map(_._1).filter(_ < batchId)
         if (prior.isEmpty) changes
         else spark.read
           .parquet(prior.map(id => s"$outDir/batch=$id").toIndexedSeq: _*)
@@ -783,27 +793,28 @@ object CdcPipeline {
     val after = snapIds(spark, matDir)
     val keep = after.filter(_ < batchId).maxOption
     after.filter(id => id < batchId && !keep.contains(id)).foreach { id =>
-      val p = new org.apache.hadoop.fs.Path(s"$matDir/snap=$id")
+      val p = new Path(s"$matDir/snap=$id")
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 
-  /** List `<prefix><id>` child dirs through the Hadoop FS API so a
-    * non-local matDir/outDir (HDFS/S3) lists correctly — java.io.File
-    * returns null there, which would silently present an empty state.
-    * A missing dir is a legitimate empty state; any OTHER failure
-    * (permission, transient FS error) propagates loudly. */
-  private def dirIds(spark: SparkSession, dir: String, prefix: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
+  /** `<prefix><id>` child dirs of `dir` by id, listed through the Hadoop
+    * FS API so a non-local matDir/outDir (HDFS/S3) lists correctly —
+    * java.io.File returns null there, which would silently present an
+    * empty state. A missing dir is a legitimate empty state; any OTHER
+    * failure (permission, transient FS error) propagates loudly. */
+  private def childDirs(spark: SparkSession, dir: String, prefix: String): Seq[(Long, Path)] = {
+    val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
-      .map(_.getPath.getName.stripPrefix(prefix).toLong)
+      .map(s => (s.getPath.getName.stripPrefix(prefix).toLong, s.getPath))
+      .sortBy(_._1)
   }
 
   private def snapIds(spark: SparkSession, matDir: String): Seq[Long] =
-    dirIds(spark, matDir, "snap=")
+    childDirs(spark, matDir, "snap=").map(_._1)
 
   /** Read the current materialized table state (live rows only). */
   def readMaterialized(spark: SparkSession, matDir: String): DataFrame = {
@@ -863,9 +874,10 @@ object CdcPipeline {
   def compactWireBatches(spark: SparkSession, outDir: String,
       retainLast: Int = 8, spanSize: Int = 64): WireCompaction = {
     require(retainLast >= 1 && spanSize >= 2)
-    val root = new org.apache.hadoop.fs.Path(outDir)
+    val root = new Path(outDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def path(s: String) = new org.apache.hadoop.fs.Path(s)
+    def path(s: String) = new Path(s)
+    def batchDirs() = childDirs(spark, outDir, "batch=")
 
     def finishSpan(lo: Long, hi: Long): Unit = {
       val staging = path(s"$outDir/.span_${lo}_$hi.staging")
@@ -875,9 +887,7 @@ object CdcPipeline {
       // batch=<hi> IS the published span — retire only [lo, hi).
       val stagingExists = fs.exists(staging)
       val retireUpTo = if (stagingExists) hi else hi - 1
-      fs.listStatus(root).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-        .map(s => (s.getPath.getName.stripPrefix("batch=").toLong, s.getPath))
+      batchDirs()
         .filter { case (id, _) => id >= lo && id <= retireUpTo }
         .foreach { case (_, p) => fs.delete(p, true) }
       if (stagingExists &&
@@ -898,12 +908,7 @@ object CdcPipeline {
       }
     }
 
-    def batchDirs(): Seq[(Long, org.apache.hadoop.fs.Path)] =
-      fs.listStatus(root).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-        .map(s => (s.getPath.getName.stripPrefix("batch=").toLong, s.getPath))
-        .sortBy(_._1)
-    def dataFiles(p: org.apache.hadoop.fs.Path): Long =
+    def dataFiles(p: Path): Long =
       fs.listStatus(p).count { f =>
         val n = f.getPath.getName
         f.isFile && !n.startsWith("_") && !n.startsWith(".")
@@ -915,7 +920,7 @@ object CdcPipeline {
     // forever — so every batch row is rewritten exactly once, not once
     // per maintenance call.
     val weightRe = "^_span_w(\\d+)$".r
-    def weightOf(p: org.apache.hadoop.fs.Path): Long =
+    def weightOf(p: Path): Long =
       fs.listStatus(p).map(_.getPath.getName).collectFirst {
         case weightRe(w) => w.toLong
       }.getOrElse(1L)
@@ -927,8 +932,8 @@ object CdcPipeline {
     // for future batches to age past the retained window
     val eligible = before.dropRight(retainLast)
       .map { case (id, p) => (id, p, weightOf(p)) }
-    val groups = Seq.newBuilder[Seq[(Long, org.apache.hadoop.fs.Path, Long)]]
-    var acc = Vector.empty[(Long, org.apache.hadoop.fs.Path, Long)]
+    val groups = Seq.newBuilder[Seq[(Long, Path, Long)]]
+    var acc = Vector.empty[(Long, Path, Long)]
     var accW = 0L
     eligible.foreach { d =>
       if (d._3 >= spanSize) { acc = Vector.empty; accW = 0 } // sealed
@@ -975,13 +980,9 @@ object CdcPipeline {
     * is exact. Returns the deleted ids. */
   def expireWireBatches(spark: SparkSession, outDir: String,
       belowId: Long): Seq[Long] = {
-    val root = new org.apache.hadoop.fs.Path(outDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .map(s => (s.getPath.getName.stripPrefix("batch=").toLong, s.getPath))
+    val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    childDirs(spark, outDir, "batch=")
       .filter(_._1 < belowId)
-      .sortBy(_._1)
       .map { case (id, p) => fs.delete(p, true); id }
   }
 

@@ -5,8 +5,8 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
 
-/** Executed-plan audit helpers shared by every scale rehearsal
-  * ([[ScaleRehearsal]], [[StreamRehearsal]], [[WireRehearsal]]): walk an
+/** Executed-plan audit helpers shared by the scale rehearsals
+  * ([[ScaleRehearsal]], [[StreamRehearsal]]): walk an
   * AQE plan through its materialized query stages, enumerate the realized
   * broadcasts with their runtime-measured sizes, and flag the two
   * scale-killer shapes (cartesian products, unbounded nested-loop joins).

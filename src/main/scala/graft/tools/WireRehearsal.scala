@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.Tables
-import graft.catalog.{SchemaCatalog, TableId}
+import graft.catalog.SchemaCatalog
 import graft.streaming.CdcPipeline
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -9,20 +9,23 @@ import org.apache.spark.sql.types._
 /** Wide-deployment rehearsal for the wire path (VERDICT r6 prescription
   * #8): a production Debezium firehose covers ~hundreds of tables, so a
   * single micro-batch fans out into one typed projection per (table,
-  * DDL-segment). The per-batch LOGICAL PLAN therefore has
-  * O(#tables × #segments) union branches, and the thing that would break
+  * catalog answer). The per-batch LOGICAL PLAN therefore has
+  * O(#tables × #answers) union branches, and the thing that would break
   * first at wide deployment is not the data volume (each branch is one
   * narrow codegen'd pass) but Catalyst analysis/planning time on that
   * union — a super-linear plan build would stall the driver between
   * batches no matter how fast the executors are.
   *
   * This tool measures exactly that, against the real
-  * [[CdcPipeline.typedSlicesFor]] + [[CdcPipeline.groupedUnions]]
-  * sharded sink `startWire` uses since r8 (the r7 all-tables union
-  * measured 1.58× per-table plan cost per table-count doubling — this
-  * rehearsal is what caught it): synthesize a parsed-shape batch
-  * spanning N tables (N = 25/50/100/200/400) × 4 DDL segments, register
-  * every table through the real DDL path, then time (a) the static plan
+  * [[CdcPipeline.ddlBarrier]] + [[CdcPipeline.typedProjections]] +
+  * [[CdcPipeline.groupedUnions]] sharded sink `startWire` uses (the r7
+  * all-tables union measured 1.58× per-table plan cost per table-count
+  * doubling — this rehearsal is what caught it): synthesize a
+  * parsed-shape batch spanning N tables (N = 25/50/100/200/400) × 4
+  * position segments, register every table through the real DDL path,
+  * then time (a) the batch's table spans, the DDL barrier (one in-batch
+  * ALTER per table between consecutive segments, so each table types
+  * under the version of every segment its rows reach) plus the static plan
   * build (analysis + optimization + initial physical planning) of every
   * per-group union-then-repartition frame and (b) the actual sharded
   * per-topic write (which re-plans each group in its own QueryExecution
@@ -45,11 +48,8 @@ object WireRehearsal {
     val spark = Tables.session("graft-wire-rehearsal")
     val cluster = "clusterA"
     val nSegments = 4
+    val Seg = 1000000L // position stride per segment (> #tables)
     val rowsPerTable = 50L
-
-    val posKeyCol = concat_ws(":", col("log_file"),
-      lpad(col("log_pos").cast("string"), 10, "0"),
-      lpad(col("row_idx").cast("string"), 4, "0")).as("pos_key")
 
     // first element is an UNTIMED warmup duplicate: JVM/codegen/
     // classloader cost lands there, so the reported per-table ratio
@@ -65,9 +65,12 @@ object WireRehearsal {
 
       // parsed-shape frame: the columns DebeziumAdapter.fromDebezium
       // produces, with rows striped across the N tables and 4 position
-      // segments (the segment boundaries mimic in-batch DDL positions).
-      // Persisted like startWire persists its micro-batch (`cached`/
-      // `parsed`), and coalesced to a micro-batch-realistic partition
+      // segments (segment s sits at positions s * Seg + Seg - 1, after
+      // the segment's in-batch ALTERs at s * Seg + table; row id lands in
+      // segment id % 4, so a table's rows reach 1, 2 or 4 segments as N
+      // is divisible by 4, by 2, or neither).
+      // Persisted like startWire persists its micro-batch parse, and
+      // coalesced to a micro-batch-realistic partition
       // count — every per-table branch scans the cache, so the union's
       // map-task count is #branches × #cache-partitions.
       val n = nTables * rowsPerTable
@@ -86,28 +89,31 @@ object WireRehearsal {
         .withColumn("row_idx", lit(0))
         .withColumn("ts_us", lit(1700000000000000L) + col("id"))
         .withColumn("transaction_id", concat(lit("tx"), col("id").cast("string")))
-        .withColumn("__pos", col("id") % nSegments) // 4 position segments
+        .withColumn("__pos", (col("id") % nSegments) * Seg + (Seg - 1))
         .coalesce(4)
         .persist()
       seg.count() // materialize the cache before timing
 
-      val img = when(col("message_type") === "delete",
-        col("before")).otherwise(col("after"))
-      val meta = Seq(col("message_type"), col("log_file"),
-        col("log_pos"), col("row_idx"), col("ts_us"),
-        col("transaction_id"), posKeyCol)
+      // the batch's DDL: one ALTER per table at each inner segment boundary
+      val ddls = (1 until nSegments).flatMap(s => (0 until nTables).map(i =>
+        CdcPipeline.Ddl(cluster, "db0", s"ALTER TABLE t$i ADD c$s INT", s * Seg + i)))
 
-      // ---- (a) STATIC plan build: segments × typedSlices → per-group
-      // unions → repartition, exactly the sharded frames startWire
-      // writes. executedPlan forces analysis + optimization + INITIAL
-      // physical planning of every group (AQE's runtime re-planning
-      // happens later, during execution). This is the per-batch driver
-      // cost paid before any task launches.
+      // ---- (a) DDL barrier + STATIC plan build: typed projections →
+      // per-group unions → repartition, exactly the sharded frames
+      // startWire writes. executedPlan forces analysis + optimization +
+      // INITIAL physical planning of every group (AQE's runtime
+      // re-planning happens later, during execution). This is the
+      // per-batch driver cost paid before any task launches.
       val t0 = System.nanoTime()
-      val outs = (0 until nSegments).flatMap { s =>
-        CdcPipeline.typedSlicesFor(catalog, cluster,
-          seg.filter(col("__pos") === s), img, meta)
-      }
+      // the data tables with their rows' span, as the control collect
+      // returns them
+      val keys = seg.groupBy("table_name").agg(min("__pos"), max("__pos")).collect()
+        .map(r => CdcPipeline.DataKey(cluster, "db0", r.getString(0),
+          Some((r.getLong(1), r.getLong(2))))).toSeq.sortBy(_.table)
+      val typing = CdcPipeline.ddlBarrier(catalog, ddls, keys)
+      assert(typing.forall(_._2.forall(_.answer.nonEmpty)),
+        "every table must type under a registered schema")
+      val outs = CdcPipeline.typedProjections(seg, typing)
       val groups = CdcPipeline.groupedUnions(outs).map(
         _.repartition(col("topic")).sortWithinPartitions("pos_key"))
       groups.foreach(_.queryExecution.executedPlan) // force static plan build
@@ -135,7 +141,7 @@ object WireRehearsal {
 
     // Verdict from the UPPER sizes (n100 → n200): the smallest size's
     // per-table cost is dominated by fixed per-run overhead (job setup,
-    // the 4 control-plane collects) divided by few tables, which
+    // the DDL barrier) divided by few tables, which
     // DEFLATES a naive widest-vs-narrowest ratio and would let a
     // genuinely super-linear build pass. Per-table ratio under the
     // doubling: 1.0 = linear, 2.0 = quadratic; the gate rejects

@@ -64,4 +64,30 @@ class SharedFramesSpec extends AnyFunSuite {
     SharedFrames.clear()
     assert(SharedFrames.size == 0)
   }
+
+  test("build seconds sum every concurrent build of a tag; clear() resets them") {
+    SharedFrames.clear()
+    val ready = new CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(8)
+    try {
+      // eight distinct inputs under ONE tag, builds finishing together
+      val futures = (1 to 8).map { i =>
+        pool.submit(new java.util.concurrent.Callable[Int] {
+          def call(): Int = {
+            ready.await(10, TimeUnit.SECONDS)
+            SharedFrames.memoValue(spark.range(i).toDF(), "build-log-test") {
+              Thread.sleep(200); i
+            }
+          }
+        })
+      }
+      ready.countDown()
+      assert(futures.map(_.get(60, TimeUnit.SECONDS)) == (1 to 8))
+      val secs = SharedFrames.buildSeconds("build-log-test")
+      assert(secs >= 8 * 0.2, s"concurrent builds lost increments: $secs s for 8 × 0.2 s")
+    } finally pool.shutdownNow()
+    SharedFrames.clear()
+    assert(!SharedFrames.buildSeconds.contains("build-log-test"),
+      "clear() must reset the per-tag build seconds")
+  }
 }

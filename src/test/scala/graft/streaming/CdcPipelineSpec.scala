@@ -3,6 +3,7 @@ package graft.streaming
 import graft.Tables
 import graft.cdc.CdcOps
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -448,34 +449,38 @@ class CdcPipelineSpec extends AnyFunSuite {
       s"id1 from the snapshot, id2 from the update, id3 deleted: $got")
   }
 
-  test("wire mode: interleaved Debezium data + schema-change events across a restart") {
+  // ---- Debezium wire feed builders (cluster `dbzcluster`, db `inventory`)
+  private val cluster = "dbzcluster"
+
+  private def src(pos: Long, tbl: String) =
+    s""""source":{"version":"2.6","connector":"mysql","name":"$cluster","ts_ms":1700000000000,"db":"inventory","table":"$tbl","server_id":1,"gtid":null,"file":"binlog.000001","pos":$pos,"row":0}"""
+
+  private def dataEvent(tbl: String, pos: Long, op: String, after: String,
+      before: String = "null") =
+    (s"$cluster.inventory.$tbl",
+      s"""{"payload":{"before":$before,"after":$after,${src(pos, tbl)},"op":"$op","ts_ms":1700000000000}}""")
+
+  private def schemaEvent(pos: Long, ddl: String, typ: String,
+      tbl: String = "customers") =
+    (cluster,
+      s"""{"payload":{${src(pos, tbl)},"ts_ms":1700000000000,"databaseName":"inventory","schemaName":null,"ddl":"$ddl","tableChanges":[{"type":"$typ","id":"\\"inventory\\".\\"$tbl\\""}]}}""")
+
+  /** One wire segment file (one micro-batch at maxFilesPerTrigger=1). */
+  private def writeWireSeg(wireDir: String, events: Seq[(String, String)]): Unit = {
     import spark.implicits._
+    events.toDF("topic", "json")
+      .select(col("topic"), lit(null).cast("binary").as("key"),
+        col("json").cast("binary").as("value"),
+        array().cast("array<struct<key:string,value:binary>>").as("headers"))
+      .coalesce(1).write.mode("append").parquet(wireDir)
+    Thread.sleep(100) // distinct mtimes → the file source preserves order
+  }
+
+  test("wire mode: interleaved Debezium data + schema-change events across a restart") {
     val root = Files.createTempDirectory("cdc-wire").toString
     val wireDir = s"$root/wire"; val outDir = s"$root/out"
     val ckDir = s"$root/ck"; val stDir = s"$root/state"
-    val cluster = "dbzcluster"
-
-    def src(pos: Long, tbl: String) =
-      s""""source":{"version":"2.6","connector":"mysql","name":"$cluster","ts_ms":1700000000000,"db":"inventory","table":"$tbl","server_id":1,"gtid":null,"file":"binlog.000001","pos":$pos,"row":0}"""
-
-    def dataEvent(tbl: String, pos: Long, op: String, after: String,
-        before: String = "null") =
-      (s"$cluster.inventory.$tbl",
-        s"""{"payload":{"before":$before,"after":$after,${src(pos, tbl)},"op":"$op","ts_ms":1700000000000}}""")
-
-    def schemaEvent(pos: Long, ddl: String, typ: String,
-        tbl: String = "customers") =
-      (cluster,
-        s"""{"payload":{${src(pos, tbl)},"ts_ms":1700000000000,"databaseName":"inventory","schemaName":null,"ddl":"$ddl","tableChanges":[{"type":"$typ","id":"\\"inventory\\".\\"$tbl\\""}]}}""")
-
-    def writeSeg(events: Seq[(String, String)]): Unit = {
-      events.toDF("topic", "json")
-        .select(col("topic"), lit(null).cast("binary").as("key"),
-          col("json").cast("binary").as("value"),
-          array().cast("array<struct<key:string,value:binary>>").as("headers"))
-        .coalesce(1).write.mode("append").parquet(wireDir)
-      Thread.sleep(100) // distinct mtimes → the file source preserves order
-    }
+    def writeSeg(events: Seq[(String, String)]): Unit = writeWireSeg(wireDir, events)
 
     // segment 1: CREATE + two inserts, plus one row for a table the
     // schema-change topic never created (quarantine path)
@@ -548,5 +553,136 @@ class CdcPipelineSpec extends AnyFunSuite {
       "a DDL-only batch must still write its batch directory")
     val st2 = CdcPipeline.loadState(stDir).get
     assert(st2.lastBatchId == 2L && st2.position("log_pos") == "700")
+  }
+
+  /** Two wire segments: a CREATE with two inserts, then a pre-ALTER row,
+    * the ALTER and two post-ALTER rows. */
+  private def writeWireFeed(wireDir: String): Unit = {
+    writeWireSeg(wireDir, Seq(
+      schemaEvent(100,
+        "CREATE TABLE `customers` (id INT PRIMARY KEY, name VARCHAR(64))", "CREATE"),
+      dataEvent("customers", 200, "c", """{"id":"1","name":"bob"}"""),
+      dataEvent("customers", 300, "c", """{"id":"2","name":"amy"}""")))
+    writeWireSeg(wireDir, Seq(
+      dataEvent("customers", 380, "c", """{"id":"4","name":"dan"}"""),
+      schemaEvent(400, "ALTER TABLE `customers` ADD email VARCHAR(128)", "ALTER"),
+      dataEvent("customers", 500, "c", """{"id":"3","name":"joe","email":"joe@x.io"}"""),
+      dataEvent("customers", 600, "u", """{"id":"1","name":"bob","email":"bob@x.io"}""",
+        """{"id":"1","name":"bob","email":null}""")))
+  }
+
+  private def startWireAt(root: String): StreamingQuery =
+    CdcPipeline.startWire(spark, s"$root/wire", cluster, s"$root/out", s"$root/ck", s"$root/st")
+
+  private def startReplayAt(root: String): StreamingQuery =
+    CdcPipeline.start(spark, s"$root/replay", s"$root/out", s"$root/ck", s"$root/st")
+
+  /** Run `start` over `root` with batch 1 dying right after its DDL
+    * barrier; batch 0 stays committed. */
+  private def crashAtBatch1(root: String, start: String => StreamingQuery): Unit = {
+    val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    CdcPipeline.afterDdlHook = { batchId =>
+      if (batchId == 1 && crashed.compareAndSet(false, true))
+        throw new RuntimeException("injected mid-DDL crash")
+    }
+    try intercept[Exception] { start(root).awaitTermination() }
+    finally CdcPipeline.afterDdlHook = _ => ()
+    assert(crashed.get, "the injected crash must have fired")
+    assert(CdcPipeline.loadState(s"$root/st").get.lastBatchId == 0L)
+  }
+
+  private def assertSameOutput(root: String, cleanRoot: String): Unit = {
+    val got = spark.read.parquet(s"$root/out")
+    val want = spark.read.parquet(s"$cleanRoot/out")
+    assert(got.count() == want.count())
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+      "output must equal the uninterrupted run's, batch by batch")
+  }
+
+  private def stagingDirs(root: String): Seq[String] =
+    new java.io.File(s"$root/out").listFiles().map(_.getName)
+      .filter(_.endsWith(".staging")).toSeq
+
+  test("wire mode: mid-DDL crash replays to the uninterrupted run's rows, schema ids and versions") {
+    val cleanRoot = Files.createTempDirectory("cdc-wire-crash-clean").toString
+    writeWireFeed(s"$cleanRoot/wire")
+    startWireAt(cleanRoot).awaitTermination()
+    val root = Files.createTempDirectory("cdc-wire-crash").toString
+    writeWireFeed(s"$root/wire")
+
+    // batch 1 dies after its ALTER reached the in-memory catalog, before
+    // the publish and the state save; the restart restores batch 0's
+    // catalog and applies the ALTER again
+    crashAtBatch1(root, startWireAt)
+    startWireAt(root).awaitTermination()
+
+    assertSameOutput(root, cleanRoot)
+    val versions = spark.read.parquet(s"$root/out/batch=1")
+      .filter(col("topic") === "inventory.customers").orderBy("pos_key")
+      .select("schema_version").collect().map(_.getLong(0)).toSeq
+    assert(versions == Seq(1L, 2L, 2L), s"replayed batch must re-type by position: $versions")
+    assert(CdcPipeline.loadState(s"$root/st").get.catalogJson ==
+      CdcPipeline.loadState(s"$cleanRoot/st").get.catalogJson,
+      "the replayed ALTER must mint the same schema ids and versions")
+  }
+
+  test("publish: a crashed attempt's staging and partial batch dirs are replaced, for both sources") {
+    def check(name: String, feed: String => Unit, start: String => StreamingQuery): Unit = {
+      val cleanRoot = Files.createTempDirectory(s"cdc-publish-$name-clean").toString
+      feed(cleanRoot)
+      start(cleanRoot).awaitTermination()
+      assert(stagingDirs(cleanRoot).isEmpty, s"$name: a clean run leaves no staging dir")
+
+      val root = Files.createTempDirectory(s"cdc-publish-$name").toString
+      feed(root)
+      crashAtBatch1(root, start)
+      // what a crash mid-publish leaves: part of batch 1 already appended
+      // to its staging dir, and a partial batch=1 from an earlier attempt
+      val batch1 = spark.read.parquet(s"$cleanRoot/out/batch=1")
+      assert(batch1.count() > 2, s"$name: batch 1 must carry rows")
+      batch1.limit(1).write.parquet(s"$root/out/.batch_1.staging")
+      batch1.limit(2).write.parquet(s"$root/out/batch=1")
+
+      start(root).awaitTermination()
+      assertSameOutput(root, cleanRoot)
+      assert(stagingDirs(root).isEmpty, s"$name: the publish must consume its staging dir")
+    }
+    check("replay", root => writeSegments(s"$root/replay", 3), startReplayAt)
+    check("wire", root => writeWireFeed(s"$root/wire"), startWireAt)
+  }
+
+  test("wire mode: mid-batch CREATE, RENAME TABLE and DROP TABLE type each row at its position") {
+    val root = Files.createTempDirectory("cdc-wire-ddl").toString
+    // one batch: rows before and after each statement
+    writeWireSeg(s"$root/wire", Seq(
+      dataEvent("items", 100, "c", """{"id":"1","name":"pre"}"""),
+      schemaEvent(200, "CREATE TABLE `items` (id INT PRIMARY KEY, name VARCHAR(64))",
+        "CREATE", "items"),
+      dataEvent("items", 300, "c", """{"id":"2","name":"a"}"""),
+      schemaEvent(400, "RENAME TABLE `items` TO `goods`", "ALTER", "items"),
+      dataEvent("goods", 500, "c", """{"id":"3","name":"b"}"""),
+      dataEvent("items", 550, "u", """{"id":"2","name":"c"}"""),
+      schemaEvent(600, "DROP TABLE `items`", "DROP", "items"),
+      dataEvent("items", 700, "c", """{"id":"5","name":"d"}""")))
+    startWireAt(root).awaitTermination()
+
+    val rows = spark.read.parquet(s"$root/out/batch=0").orderBy("pos_key")
+      .select("log_pos", "topic", "schema_version", "payload_json")
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getString(3))).toSeq
+    // pos 100: before the CREATE → unregistered, raw image
+    // pos 300: after the CREATE → items v1, typed to (id INT, name)
+    // pos 500: RENAME TABLE only invalidates the catalog's cache
+    //   (SchemaCatalog.applyDdl), so `goods` has no entry → unregistered;
+    // pos 550: and `items` still types as v1
+    // pos 700: after the DROP → unregistered
+    assert(rows == Seq(
+      (100L, "__unregistered", 0L, """{"id":"1","name":"pre"}"""),
+      (300L, "inventory.items", 1L, """{"id":2,"name":"a"}"""),
+      (500L, "__unregistered", 0L, """{"id":"3","name":"b"}"""),
+      (550L, "inventory.items", 1L, """{"id":2,"name":"c"}"""),
+      (700L, "__unregistered", 0L, """{"id":"5","name":"d"}""")),
+      s"rows must type under the catalog at their own position: $rows")
+    val st = CdcPipeline.loadState(s"$root/st").get
+    assert(st.lastBatchId == 0L && st.position("log_pos") == "700")
   }
 }

@@ -2,8 +2,10 @@
 # Run a graft main class directly against the compiled classes + Spark jars
 # (bypasses sbt, so rehearsal/verify runs don't contend with a test build).
 # Usage: tools/run_main.sh <mainClass> [args...]
+# The heap is half of RAM, clamped to 2-8 GB.
 set -euo pipefail
 cd "$(dirname "$0")/.."
+heap="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)"
 exec java \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
@@ -19,5 +21,5 @@ exec java \
   --add-opens=java.base/sun.nio.cs=ALL-UNNAMED \
   --add-opens=java.base/sun.security.action=ALL-UNNAMED \
   --add-opens=java.base/sun.util.calendar=ALL-UNNAMED \
-  -Xmx96g \
+  "-Xmx$heap" \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$@"
