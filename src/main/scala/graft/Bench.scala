@@ -91,19 +91,12 @@ object Bench {
       try run(name)
       catch { case e: Throwable => System.err.println(s"[bench] warmup $name failed: $e") })
 
-    // Memo build accounting (r14 verdict item 5): the warmup pass pays
-    // every SharedFrames build, so the timed medians below are amortized
-    // steady-state numbers. Print what each memo build cost so that
-    // amortization stays auditable — a query that gained a memo this
-    // round must quote its fresh-JVM TimeQuery A/B alongside the median.
-    // Diagnostics line, deliberately avoiding the substring "metric".
-    val memoSecs = graft.data.SharedFrames.buildSeconds
-    if (memoSecs.nonEmpty) {
-      val body = memoSecs.toSeq.sortBy(-_._2).map { case (tag, s) =>
-        "\"" + tag + "\":" + BigDecimal(s).setScale(3, BigDecimal.RoundingMode.HALF_UP)
-      }.mkString("{", ",", "}")
-      println(s"""{"bench_diag":"memo_build","seconds":$body}""")
-    }
+    // Memo build accounting: the warmup pass pays every SharedFrames
+    // build, so the timed medians below are amortized steady-state
+    // numbers. The sidecar records what each memo build cost so that
+    // amortization stays auditable — a query that gained a memo must quote
+    // its fresh-JVM TimeQuery A/B alongside the median.
+    val warmupMemoSecs = graft.data.SharedFrames.buildSeconds
 
     // Timed passes: the per-query number is the MEDIAN of `reps`
     // in-process repetitions — single-shot totals swung 54-89 s on
@@ -198,7 +191,15 @@ object Bench {
     // Sidecar copy (full form, with iqr): the durable artifact regardless
     // of how stdout gets truncated (same pattern as ScaleRehearsal's
     // BENCH_sf1.json).
-    val full = s"""{"metric":"total","value":${r4(total)},"unit":"sec","queries":$qs,"iqr":$iqrs,"reps":$reps,"sf":"$sfDir"}"""
+    // memo_build_late: builds made after the warmup (a query whose warmup
+    // failed builds its memos in timed rep 1, and that rep's time holds them)
+    def secsJson(m: Map[String, Double]): String = m.toSeq.sortBy(-_._2).map { case (tag, s) =>
+      "\"" + tag + "\":" + BigDecimal(s).setScale(3, BigDecimal.RoundingMode.HALF_UP)
+    }.mkString("{", ",", "}")
+    val lateMemoSecs = graft.data.SharedFrames.buildSeconds.map { case (tag, s) =>
+      tag -> (s - warmupMemoSecs.getOrElse(tag, 0.0)) }.filter(_._2 > 0)
+    val full = s"""{"metric":"total","value":${r4(total)},"unit":"sec","queries":$qs,"iqr":$iqrs,"reps":$reps,"sf":"$sfDir",""" +
+      s""""memo_build":${secsJson(warmupMemoSecs)},"memo_build_late":${secsJson(lateMemoSecs)}}"""
     val sidecar = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_local.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(sidecar), full + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] sidecar write failed: $e") }

@@ -22,6 +22,18 @@ object Tables {
     * shuffle partitions, `cpus` defaulting to the machine's cores
     * (`SPARK_GRAFT_CPUS` overrides); at cluster scale partitioning is
     * AQE-advised instead.
+    *
+    * Artifact isolation is off. Spark keys its generated-code cache by
+    * (thread context classloader, source), and with isolation on, every
+    * cloned session — one per `CdcPipeline.start`/`startWire` run —
+    * gets its own artifact state, so the executor builds a fresh
+    * classloader per run and recompiles every task-side class: 41
+    * classes per `wire_wide_ddl` restart and 29 per `replay_trickle_ddl`
+    * restart in cdcbench, 0 with isolation off. Cloned sessions copy the
+    * setting. Nothing here adds session artifacts (no `addArtifact`, no
+    * Spark Connect; UDFs live on the application classpath), so
+    * isolation buys nothing. The setting only takes effect when the
+    * session is created.
     */
   def session(appName: String, cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString)): SparkSession = {
@@ -45,6 +57,7 @@ object Tables {
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "262144")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // session-scoped UDAFs (native expressions register via GraftExtensions;

@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -34,8 +34,9 @@ object CdcOps {
     * low_level_binlog_stream_reader_wrapper.py:78-94). A refresh row's
     * base_table is its base, so whitelisting by base implements the
     * expanded set {t, t_data_pipeline_refresh}. */
-  def whitelist(df: DataFrame): DataFrame =
-    df.filter(col("base_table").isin(WHITELIST: _*))
+  val whitelisted: Column = col("base_table").isin(WHITELIST: _*)
+
+  def whitelist(df: DataFrame): DataFrame = df.filter(whitelisted)
 
   /** T4 + T7 — refresh rows re-target to the base table and become
     * RefreshMessage (reference low_level_binlog_stream_reader_wrapper.py:114-124). */
@@ -45,8 +46,9 @@ object CdcOps {
       when(col("is_refresh"), lit("refresh")).otherwise(col("message_type")))
 
   /** T8 — schema blacklist (reference base_event_handler.py:51-63). */
-  def blacklistFilter(df: DataFrame): DataFrame =
-    df.filter(!col("database_name").isin(BLACKLIST: _*))
+  val blacklisted: Column = col("database_name").isin(BLACKLIST: _*)
+
+  def blacklistFilter(df: DataFrame): DataFrame = df.filter(!blacklisted)
 
   /** T6 — RowsEvent explode: one binlog event packs k%3+1 row images
     * (reference low_level_binlog_stream_reader_wrapper.py:100-135).

@@ -211,7 +211,13 @@ object CdcPipeline {
   }
 
   /** Start the pipeline. `replayDir` holds parquet files in [[replaySchema]];
-    * new files are new binlog segments. */
+    * new files are new binlog segments.
+    *
+    * Each call runs in a cloned session. Build `spark` with
+    * [[graft.Tables.session]], or set `spark.sql.artifact.isolation.enabled`
+    * to false when creating it: with isolation on, every run gets a fresh
+    * executor classloader and recompiles all of its generated code. The
+    * setting cannot be changed on a session that already exists. */
   def start(
       spark: SparkSession,
       replayDir: String,
@@ -240,30 +246,31 @@ object CdcPipeline {
     ) ++ perTableCols
 
     // T3/T4/T7/T8 — the data rows the envelope is built from
-    def dataRows(cached: DataFrame): DataFrame =
-      CdcOps.blacklistFilter(CdcOps.retarget(CdcOps.whitelist(CdcOps.dataOnly(cached))))
+    val isData = col("kind") === "data" && CdcOps.whitelisted && !CdcOps.blacklisted
+    def dataRows(cached: DataFrame): DataFrame = CdcOps.retarget(cached.filter(isData))
 
     val replay = new Ingress {
       override def stream(source: DataFrame): DataFrame =
         CdcOps.admit(CdcReplay.fromEvents(source))
           .observe("cdc", observeCols.head, observeCols.tail: _*)
 
-      // DDL (T19 routing) and the position mirror (T5/T27: the max binlog
-      // coordinate and the latest heartbeat beacon over every admitted
-      // event) in one pass, then the data tables to register
+      // ONE scan of the cached batch (under AQE every scan of the not yet
+      // materialized cache is a job of its own): each admitted event gives
+      // its DDL row (T19 routing) or position row (T5/T27: the max binlog
+      // coordinate and the latest heartbeat beacon), and each of the
+      // [[dataRows]] also gives its table's key row
       def control(cached: DataFrame): Seq[DataFrame] = {
         val ddl = col("kind") === "ddl"
-        Seq(
-          controlRows(cached, when(ddl, "ddl").otherwise("pos"),
-            "cluster" -> when(ddl, CdcSqlFragments.CLUSTER),
-            "db" -> when(ddl, col("database_name")),
-            "name" -> when(ddl, expr(CdcSqlFragments.DDL_STMT)),
-            "at" -> when(ddl, col("event_id")),
-            "p" -> struct(col("log_file"), col("log_pos")),
-            "hb" -> when(col("kind") === "heartbeat", struct(col("event_id"), col("ts_us")))),
-          controlRows(dataRows(cached), lit("key"),
-            "cluster" -> lit(CdcSqlFragments.CLUSTER), "db" -> col("database_name"),
-            "name" -> col("target_table")))
+        val event = controlRow(when(ddl, "ddl").otherwise("pos"),
+          "cluster" -> when(ddl, CdcSqlFragments.CLUSTER),
+          "db" -> when(ddl, col("database_name")),
+          "name" -> when(ddl, expr(CdcSqlFragments.DDL_STMT)),
+          "at" -> when(ddl, col("event_id")),
+          "p" -> struct(col("log_file"), col("log_pos")),
+          "hb" -> when(col("kind") === "heartbeat", struct(col("event_id"), col("ts_us"))))
+        val key = controlRow(lit("key"), "cluster" -> lit(CdcSqlFragments.CLUSTER),
+          "db" -> col("database_name"), "name" -> col("base_table"))
+        Seq(cached.select(inline(when(isData, array(event, key)).otherwise(array(event)))))
       }
 
       def outputs(cached: DataFrame, catalog: SchemaCatalog, keys: Seq[DataKey],
@@ -348,6 +355,10 @@ object CdcPipeline {
     * Scale: the projections are control-plane-bounded (#tables × #answers
     * each), each one narrow codegen'd pass over the cached parse; the sink
     * repartition is the only shuffle.
+    *
+    * As for [[start]]: build `spark` with [[graft.Tables.session]] or with
+    * `spark.sql.artifact.isolation.enabled=false`, or every run recompiles
+    * its generated code.
     */
   def startWire(
       spark: SparkSession,
@@ -537,11 +548,19 @@ object CdcPipeline {
     "kind STRING, cluster STRING, db STRING, name STRING, at BIGINT, pos BIGINT, " +
       "p STRUCT<log_file: STRING, log_pos: BIGINT>, hb STRUCT<serial: BIGINT, ts_us: BIGINT>")
 
-  private def controlRows(df: DataFrame, kind: Column, cols: (String, Column)*): DataFrame = {
+  private def controlCols(kind: Column, cols: Seq[(String, Column)]): Seq[Column] = {
     val set = cols.toMap + ("kind" -> kind)
-    df.select(controlSchema.fields.toIndexedSeq.map(f =>
-      set.getOrElse(f.name, lit(null)).cast(f.dataType).as(f.name)): _*)
+    controlSchema.fields.toIndexedSeq.map(f =>
+      set.getOrElse(f.name, lit(null)).cast(f.dataType).as(f.name))
   }
+
+  private def controlRows(df: DataFrame, kind: Column, cols: (String, Column)*): DataFrame =
+    df.select(controlCols(kind, cols): _*)
+
+  /** One control row as a struct, for a source that emits several kinds
+    * of control row per input row from one scan. */
+  private def controlRow(kind: Column, cols: (String, Column)*): Column =
+    struct(controlCols(kind, cols): _*)
 
   /** DDL in position order, data tables sorted, and the position mirror
     * — empty for a batch admit emptied, which [[mergePosition]] keeps as

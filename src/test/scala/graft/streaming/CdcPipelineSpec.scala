@@ -685,4 +685,44 @@ class CdcPipelineSpec extends AnyFunSuite {
     val st = CdcPipeline.loadState(s"$root/st").get
     assert(st.lastBatchId == 0L && st.position("log_pos") == "700")
   }
+
+  test("a restart compiles no generated code for a segment of the shape it ran before, for both sources") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def check(name: String, segment: (String, Int) => Unit,
+        start: String => StreamingQuery): Unit = {
+      val root = Files.createTempDirectory(s"cdc-codegen-$name").toString
+      segment(root, 0)
+      start(root).awaitTermination()
+      segment(root, 1)
+      val before = compiled
+      start(root).awaitTermination()
+      assert(compiled == before, s"$name: the restart compiled ${compiled - before} classes again")
+
+      val cleanRoot = Files.createTempDirectory(s"cdc-codegen-$name-clean").toString
+      segment(cleanRoot, 0)
+      segment(cleanRoot, 1)
+      start(cleanRoot).awaitTermination()
+      assertSameOutput(root, cleanRoot)
+      assert(CdcPipeline.loadState(s"$root/st").get.lastBatchId == 1L)
+    }
+    // replay: the sf0.001 events without their DDL, split in two by parity
+    val events = Tables.events(spark, sfDir)
+      .select("event_id", "user_id", "event_type", "value", "props", "ts_us")
+    val noDdl = events.join(graft.cdc.CdcReplay.fromEvents(events)
+      .filter(col("kind") =!= "ddl").select("event_id"), Seq("event_id"), "left_semi")
+    check("replay", (root, i) => {
+      noDdl.filter(pmod(col("event_id"), lit(2)) === i)
+        .coalesce(1).write.mode("append").parquet(s"$root/replay")
+      Thread.sleep(100)
+    }, startReplayAt)
+    // wire: the first segment creates the table, both carry its inserts
+    check("wire", (root, i) => writeWireSeg(s"$root/wire",
+      (if (i == 0) Seq(schemaEvent(100,
+        "CREATE TABLE `customers` (id INT PRIMARY KEY, name VARCHAR(64))", "CREATE"))
+      else Nil) ++ Seq(
+        dataEvent("customers", 200 + 100 * i, "c", s"""{"id":"${2 * i}","name":"bob"}"""),
+        dataEvent("customers", 250 + 100 * i, "c", s"""{"id":"${2 * i + 1}","name":"amy"}"""))),
+      startWireAt)
+  }
 }
