@@ -119,10 +119,7 @@ class SchemaCatalog(piiTables: Set[String] = Set.empty) {
         val curPkeys = entries.get(id).map(_.pkeys).getOrElse(Nil)
         if (rename) {
           val (newStruct, newName) = MysqlDdlToStruct.applyAlterRename(sql, cur)
-          val newId = id.copy(table = newName)
-          entries -= id
-          invalidateCache()
-          Some(register(newId, newStruct, curPkeys))
+          Some(move(id, id.copy(table = newName), newStruct, curPkeys))
         } else {
           val (newStruct, newPkeys) = MysqlDdlToStruct.applyAlterWithKeys(sql, cur, curPkeys)
           entries.get(id).foreach { old =>
@@ -137,11 +134,30 @@ class SchemaCatalog(piiTables: Set[String] = Set.empty) {
         cache -= id
         versionCounter += 1
         None
-      case RenameTableStatement() =>
+      case RenameTableStatement(renames) =>
+        // MySQL renames the pairs left to right (`a TO tmp, b TO a, tmp TO
+        // b` swaps); a pair whose table is unknown moves nothing. No ALTER
+        // position is recorded: the columns, and so the payload version,
+        // stay as they were.
         invalidateCache()
-        None
+        renames.flatMap { case ((fromDb, from), (toDb, to)) =>
+          val id = TableId(cluster, fromDb.getOrElse(defaultDb), from)
+          entries.get(id).map(ts =>
+            move(id, TableId(cluster, toDb.getOrElse(defaultDb), to), ts.struct, ts.pkeys))
+        }.lastOption
       case _ => None
     }
+  }
+
+  /** Both rename forms (`ALTER TABLE a RENAME TO b`, `RENAME TABLE a TO
+    * b`): the entry moves to its new name, registered there with
+    * `struct`, and the whole cache is cleared (T17). */
+  private def move(from: TableId, to: TableId, struct: StructType,
+      pkeys: Seq[String]): TableSchema = {
+    entries -= from
+    val ts = register(to, struct, pkeys)
+    invalidateCache()
+    ts
   }
 
   // ---- T25: snapshot / restore ---------------------------------------

@@ -20,7 +20,9 @@ import org.apache.spark.sql.types._
   * origin (`db`, `table`, `server_id`), and optional `gtid`. The row
   * images are parsed as MAP<STRING,STRING> — per-table schemas vary at
   * runtime, which is exactly the dynamic-payload model the catalog's
-  * evolved StructTypes then type (T22b's `evolvePayload`).
+  * evolved StructTypes then type (on the wire path,
+  * `CdcPipeline.ddlBarrier` + `typedProjections`: each row under the
+  * catalog at its own position).
   *
   * Mapping (reference semantics the rest of the engine already encodes):
   * op c/u/d → create/update/delete (the reference's
@@ -243,13 +245,13 @@ object DebeziumAdapter {
 
   /** Feed a parsed schema-change stream into the catalog — the ingestion
     * the reference's schema_event_handler owns (py:49-132): statements
-    * apply in binlog order, ALTERs record their position so the data
-    * plane's payload-version intervals (T22b `schemaIntervals` /
-    * `CdcPipeline`'s interval state) follow the REAL connector's DDL from
-    * that position onward. The collect is control-plane-tiny by
-    * construction (one row per DDL statement, the same bound the
-    * reference's single-threaded DDL path implies). Returns the number of
-    * schema-changing statements applied. */
+    * apply in binlog order, ALTERs record their position so the payload
+    * versions (T22b: replay's ALTER intervals; on the wire path
+    * `CdcPipeline.ddlBarrier` + `typedProjections`) follow the REAL
+    * connector's DDL from that position onward. The collect is
+    * control-plane-tiny by construction (one row per DDL statement, the
+    * same bound the reference's single-threaded DDL path implies).
+    * Returns the number of schema-changing statements applied. */
   def applySchemaChanges(catalog: graft.catalog.SchemaCatalog,
       changes: DataFrame): Int = {
     val rows = changes

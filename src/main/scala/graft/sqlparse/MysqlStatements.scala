@@ -94,7 +94,11 @@ final case class AlterDatabaseStatement() extends MysqlStatement("alter_database
 final case class DropDatabaseStatement() extends MysqlStatement("drop_database")
 final case class CreateIndexStatement() extends MysqlStatement("create_index")
 final case class DropIndexStatement() extends MysqlStatement("drop_index")
-final case class RenameTableStatement() extends MysqlStatement("rename_table")
+/** `RENAME TABLE a TO b [, c TO d] ...`: the (from, to) name pairs in
+  * statement order, each name (database, table) as written. */
+final case class RenameTableStatement(
+    renames: Seq[((Option[String], String), (Option[String], String))])
+    extends MysqlStatement("rename_table")
 case object UnsupportedStatement extends MysqlStatement("unsupported") {
   override def isSupported: Boolean = false
 }
@@ -182,13 +186,16 @@ object MysqlStatementClassifier {
       j
     }
 
-    def parseTable(at: Int): (Option[String], String) = {
-      if (at >= ts.length) throw new IdentifierParseError("missing table name")
-      MysqlIdentifierParser.parseQualified(ts(at)) match {
+    def tableName(tok: String): (Option[String], String) =
+      MysqlIdentifierParser.parseQualified(tok) match {
         case t :: Nil => (None, t)
         case d :: t :: Nil => (Some(d), t)
-        case _ => throw new IdentifierParseError(s"over-qualified name <${ts(at)}>")
+        case _ => throw new IdentifierParseError(s"over-qualified name <$tok>")
       }
+
+    def parseTable(at: Int): (Option[String], String) = {
+      if (at >= ts.length) throw new IdentifierParseError("missing table name")
+      tableName(ts(at))
     }
 
     /** ALTER TABLE ... RENAME [TO|AS] — but not RENAME COLUMN/INDEX/KEY
@@ -236,8 +243,17 @@ object MysqlStatementClassifier {
           case _ => UnsupportedStatement
         }
       case "RENAME" =>
-        if (ts.length > 1 && kw(ts(1)) == "TABLE") RenameTableStatement()
-        else UnsupportedStatement
+        if (ts.length > 1 && kw(ts(1)) == "TABLE") {
+          // from TO to [, from TO to]... [;]
+          val names = ts.drop(2).filterNot(_ == ";")
+          if (names.length % 4 != 3 || names.indices.exists(i => i % 4 match {
+              case 1 => kw(names(i)) != "TO"
+              case 3 => names(i) != ","
+              case _ => false
+            })) throw new IdentifierParseError(s"malformed RENAME TABLE <$query>")
+          RenameTableStatement(names.indices.filter(_ % 4 == 0).map(i =>
+            (tableName(names(i)), tableName(names(i + 2)))))
+        } else UnsupportedStatement
       case _ => UnsupportedStatement
     }
   }

@@ -1121,24 +1121,6 @@ object StreamingAnalytics {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
   }
 
-  /** Streaming sparse-similarity ADMISSION monitor — q32's continuous
-    * form: as events arrive, score each active user's windowed activity
-    * against a STORED set of query-user profiles (q32's sparse
-    * (q_user, bucket, q_n) frame — at deployment, the batch artifact of
-    * the users being watched) and flag windows whose inner product
-    * crosses the admission threshold (correlated-activity detection: a
-    * new account moving like a watched one).
-    *
-    * The trick that keeps this ONE stateful operator: an event of user u
-    * in bucket β contributes exactly q_n[β] to dot(u, q) — so the dot is
-    * a windowed SUM over the stream-static join of events against the
-    * profile table, never a profile-vs-profile join. State is the
-    * windowed agg's (windows × users × matched watch-users) rows, bounded
-    * by the watermark; the profile table is static and joins stateless.
-    * The bucket grid (t0, span, B) is fixed configuration at deployment —
-    * the batch q32 derives it from the data, so the convergence spec
-    * passes the batch corpus's own span. Over a window covering the whole
-    * span, dot(u, q) equals batch q32's dot exactly (the spec's pin). */
   /** Streaming leg of the ANN index lifecycle's MIGRATE step — continuous
     * ingest INTO a [[graft.data.VectorOps.writeCellPartitioned]] layout
     * (r9 VERDICT #3): s17 decides WHEN to retrain,
@@ -1171,6 +1153,24 @@ object StreamingAnalytics {
         graft.data.VectorOps.ingestCellBatch(batch, path, centroids, batchId)
       }
 
+  /** Streaming sparse-similarity ADMISSION monitor — q32's continuous
+    * form: as events arrive, score each active user's windowed activity
+    * against a STORED set of query-user profiles (q32's sparse
+    * (q_user, bucket, q_n) frame — at deployment, the batch artifact of
+    * the users being watched) and flag windows whose inner product
+    * crosses the admission threshold (correlated-activity detection: a
+    * new account moving like a watched one).
+    *
+    * The trick that keeps this ONE stateful operator: an event of user u
+    * in bucket β contributes exactly q_n[β] to dot(u, q) — so the dot is
+    * a windowed SUM over the stream-static join of events against the
+    * profile table, never a profile-vs-profile join. State is the
+    * windowed agg's (windows × users × matched watch-users) rows, bounded
+    * by the watermark; the profile table is static and joins stateless.
+    * The bucket grid (t0, span, B) is fixed configuration at deployment —
+    * the batch q32 derives it from the data, so the convergence spec
+    * passes the batch corpus's own span. Over a window covering the whole
+    * span, dot(u, q) equals batch q32's dot exactly (the spec's pin). */
   def activityAdmissionStream(events: DataFrame, queryProfiles: DataFrame,
       t0Us: Long, spanUs: Long, b: Int = 64, dotThreshold: Long = 0L,
       windowLength: String = "1 minute",

@@ -127,10 +127,31 @@ class SchemaCatalogSpec extends AnyFunSuite {
     assert(c.cachedTables.nonEmpty)
     c.applyDdl("cl", "db", "RENAME TABLE `a` TO `b`")
     assert(c.cachedTables.isEmpty)
-    // registry still holds it; lookup repopulates the cache
-    assert(c.lookup(TableId("cl", "db", "a")).isDefined)
+    // MySQL: the table is now `b` and `a` no longer exists; lookup
+    // repopulates the cache
+    assert(c.lookup(TableId("cl", "db", "a")).isEmpty)
+    assert(c.lookup(TableId("cl", "db", "b")).get.struct.fieldNames.toSeq == Seq("x"))
     c.applyDdl("cl", "db", "DROP TABLE a")
     assert(c.lookup(TableId("cl", "db", "a")).isEmpty)
+    c.applyDdl("cl", "db", "DROP TABLE b")
+    assert(c.lookup(TableId("cl", "db", "b")).isEmpty)
+  }
+
+  test("RENAME TABLE moves each pair left to right, across databases, without an ALTER position") {
+    val c = cat
+    c.applyDdl("cl", "db", "CREATE TABLE a (x int)")
+    c.applyDdl("cl", "db", "CREATE TABLE b (y int, z int)")
+    c.applyDdl("cl", "db", "CREATE TABLE c (w int)")
+    // MySQL renames left to right, so this swaps `a` and `b`; `c` moves
+    // to database `db2`; `gone` does not exist and moves nothing
+    c.applyDdl("cl", "db",
+      "RENAME TABLE a TO tmp, b TO a, tmp TO b, `db`.`c` TO db2.c2, gone TO gone2;", atEventId = 7L)
+    def cols(db: String, t: String) = c.lookup(TableId("cl", db, t)).map(_.struct.fieldNames.toSeq)
+    assert(cols("db", "a").contains(Seq("y", "z")))
+    assert(cols("db", "b").contains(Seq("x")))
+    assert(cols("db", "tmp").isEmpty && cols("db", "c").isEmpty && cols("db", "gone2").isEmpty)
+    assert(cols("db2", "c2").contains(Seq("w")))
+    assert(c.alterEvents.isEmpty, "a rename changes no columns, so it records no ALTER position")
   }
 
   test("snapshot/restore round-trips the whole catalog (T25/T30)") {

@@ -146,6 +146,14 @@ class MysqlStatementClassifierSpec extends AnyFunSuite {
     assert(c("RENAME TABLE `a` TO `b`").isInstanceOf[RenameTableStatement])
   }
 
+  test("RENAME TABLE returns its name pairs in order, db-qualified names included") {
+    assert(c("RENAME TABLE `a` TO `b`") == RenameTableStatement(Seq((None, "a") -> (None, "b"))))
+    assert(c("rename table db1.`t 1` to `db2`.t2, x TO `y`.`z`;") == RenameTableStatement(Seq(
+      (Some("db1"), "t 1") -> (Some("db2"), "t2"), (None, "x") -> (Some("y"), "z"))))
+    Seq("RENAME TABLE a", "RENAME TABLE a TO", "RENAME TABLE a b", "RENAME TABLE a TO b,",
+      "RENAME TABLE a TO b c TO d").foreach(q => assert(c(q) == UnsupportedStatement, q))
+  }
+
   test("unsupported catch-all and skip set") {
     val st = c("SOME CRAZY UNSUPPORTED STATEMENT")
     assert(st == UnsupportedStatement)

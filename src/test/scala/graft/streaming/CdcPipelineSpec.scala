@@ -452,13 +452,14 @@ class CdcPipelineSpec extends AnyFunSuite {
   // ---- Debezium wire feed builders (cluster `dbzcluster`, db `inventory`)
   private val cluster = "dbzcluster"
 
-  private def src(pos: Long, tbl: String) =
-    s""""source":{"version":"2.6","connector":"mysql","name":"$cluster","ts_ms":1700000000000,"db":"inventory","table":"$tbl","server_id":1,"gtid":null,"file":"binlog.000001","pos":$pos,"row":0}"""
+  /** `file` goes into the JSON as written: escape it there. */
+  private def src(pos: Long, tbl: String, file: String = "binlog.000001") =
+    s""""source":{"version":"2.6","connector":"mysql","name":"$cluster","ts_ms":1700000000000,"db":"inventory","table":"$tbl","server_id":1,"gtid":null,"file":"$file","pos":$pos,"row":0}"""
 
   private def dataEvent(tbl: String, pos: Long, op: String, after: String,
-      before: String = "null") =
+      before: String = "null", file: String = "binlog.000001") =
     (s"$cluster.inventory.$tbl",
-      s"""{"payload":{"before":$before,"after":$after,${src(pos, tbl)},"op":"$op","ts_ms":1700000000000}}""")
+      s"""{"payload":{"before":$before,"after":$after,${src(pos, tbl, file)},"op":"$op","ts_ms":1700000000000}}""")
 
   private def schemaEvent(pos: Long, ddl: String, typ: String,
       tbl: String = "customers") =
@@ -599,8 +600,8 @@ class CdcPipelineSpec extends AnyFunSuite {
       "output must equal the uninterrupted run's, batch by batch")
   }
 
-  private def stagingDirs(root: String): Seq[String] =
-    new java.io.File(s"$root/out").listFiles().map(_.getName)
+  private def stagingDirs(dir: String): Seq[String] =
+    new java.io.File(dir).listFiles().map(_.getName)
       .filter(_.endsWith(".staging")).toSeq
 
   test("wire mode: mid-DDL crash replays to the uninterrupted run's rows, schema ids and versions") {
@@ -631,7 +632,7 @@ class CdcPipelineSpec extends AnyFunSuite {
       val cleanRoot = Files.createTempDirectory(s"cdc-publish-$name-clean").toString
       feed(cleanRoot)
       start(cleanRoot).awaitTermination()
-      assert(stagingDirs(cleanRoot).isEmpty, s"$name: a clean run leaves no staging dir")
+      assert(stagingDirs(s"$cleanRoot/out").isEmpty, s"$name: a clean run leaves no staging dir")
 
       val root = Files.createTempDirectory(s"cdc-publish-$name").toString
       feed(root)
@@ -645,10 +646,18 @@ class CdcPipelineSpec extends AnyFunSuite {
 
       start(root).awaitTermination()
       assertSameOutput(root, cleanRoot)
-      assert(stagingDirs(root).isEmpty, s"$name: the publish must consume its staging dir")
+      assert(stagingDirs(s"$root/out").isEmpty, s"$name: the publish must consume its staging dir")
     }
     check("replay", root => writeSegments(s"$root/replay", 3), startReplayAt)
     check("wire", root => writeWireFeed(s"$root/wire"), startWireAt)
+
+    // snapshots publish the same way
+    val matRoot = Files.createTempDirectory("cdc-publish-mat").toString
+    writeSegments(s"$matRoot/replay", 2)
+    CdcPipeline.start(spark, s"$matRoot/replay", s"$matRoot/out", s"$matRoot/ck",
+      s"$matRoot/st", materializeDir = Some(s"$matRoot/mat")).awaitTermination()
+    assert(new java.io.File(s"$matRoot/mat/snap=1").isDirectory)
+    assert(stagingDirs(s"$matRoot/mat").isEmpty, "a clean materializing run leaves no staging dir")
   }
 
   test("wire mode: mid-batch CREATE, RENAME TABLE and DROP TABLE type each row at its position") {
@@ -671,15 +680,15 @@ class CdcPipelineSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getString(3))).toSeq
     // pos 100: before the CREATE → unregistered, raw image
     // pos 300: after the CREATE → items v1, typed to (id INT, name)
-    // pos 500: RENAME TABLE only invalidates the catalog's cache
-    //   (SchemaCatalog.applyDdl), so `goods` has no entry → unregistered;
-    // pos 550: and `items` still types as v1
+    // pos 500: after the RENAME the table is `goods`, with `items`'
+    //   columns and no ALTER since its CREATE → goods v1, typed
+    // pos 550: `items` no longer exists → unregistered, raw image
     // pos 700: after the DROP → unregistered
     assert(rows == Seq(
       (100L, "__unregistered", 0L, """{"id":"1","name":"pre"}"""),
       (300L, "inventory.items", 1L, """{"id":2,"name":"a"}"""),
-      (500L, "__unregistered", 0L, """{"id":"3","name":"b"}"""),
-      (550L, "inventory.items", 1L, """{"id":2,"name":"c"}"""),
+      (500L, "inventory.goods", 1L, """{"id":3,"name":"b"}"""),
+      (550L, "__unregistered", 0L, """{"id":"2","name":"c"}"""),
       (700L, "__unregistered", 0L, """{"id":"5","name":"d"}""")),
       s"rows must type under the catalog at their own position: $rows")
     val st = CdcPipeline.loadState(s"$root/st").get
@@ -724,5 +733,85 @@ class CdcPipelineSpec extends AnyFunSuite {
         dataEvent("customers", 200 + 100 * i, "c", s"""{"id":"${2 * i}","name":"bob"}"""),
         dataEvent("customers", 250 + 100 * i, "c", s"""{"id":"${2 * i + 1}","name":"amy"}"""))),
       startWireAt)
+  }
+
+  test("state.json keeps a wire position whose file name holds a quote and a backslash") {
+    val root = Files.createTempDirectory("cdc-wire-escape").toString
+    // Debezium's source.file is bin"log\x.000001 (JSON-escaped below)
+    writeWireSeg(s"$root/wire", Seq(dataEvent("customers", 200, "c",
+      """{"id":"1","name":"bob"}""", file = """bin\"log\\x.000001""")))
+    startWireAt(root).awaitTermination()
+    val st = CdcPipeline.loadState(s"$root/st").get
+    assert(st.lastBatchId == 0L && st.position("log_pos") == "200")
+    assert(st.position("log_file") == "bin\"log\\x.000001", st.position)
+    eventually() { assert(CdcPipeline.loadState(s"$root/st").get.cleanShutdown) }
+    assert(CdcPipeline.loadState(s"$root/st").get.position == st.position)
+  }
+
+  // ---- T35 instance lock
+
+  private def lockOf(root: String) = java.nio.file.Paths.get(s"$root/st", "lock")
+
+  /** One replay segment of a single data event. */
+  private def writeOneEvent(root: String): Unit = {
+    import spark.implicits._
+    Seq((100L, 5L, "signup", 1.0, """{"k": 2}""", 100000L))
+      .toDF("event_id", "user_id", "event_type", "value", "props", "ts_us")
+      .coalesce(1).write.mode("append").parquet(s"$root/replay")
+  }
+
+  test("instance lock: a second start fails while the first run is mid-batch, and succeeds after it (T35)") {
+    val root = Files.createTempDirectory("cdc-lock").toString
+    writeSegments(s"$root/replay", 2)
+    val inBatch = new java.util.concurrent.CountDownLatch(1)
+    val proceed = new java.util.concurrent.CountDownLatch(1)
+    CdcPipeline.afterDdlHook = { _ => inBatch.countDown(); proceed.await() }
+    try {
+      val q1 = startReplayAt(root)
+      assert(inBatch.await(2, java.util.concurrent.TimeUnit.MINUTES), "the first run must reach its batch")
+      val e = intercept[IllegalStateException](startReplayAt(root))
+      assert(e.getMessage.contains("holds the lock"), e.getMessage)
+      proceed.countDown()
+      q1.awaitTermination()
+    } finally {
+      proceed.countDown()
+      CdcPipeline.afterDdlHook = _ => ()
+    }
+    eventually() { assert(!Files.exists(lockOf(root))) }
+    startReplayAt(root).awaitTermination()
+    assert(CdcPipeline.loadState(s"$root/st").get.lastBatchId == 1L)
+  }
+
+  /** A run over `root` takes over a lock file holding `holder`. */
+  private def assertTakenOver(holder: String): Unit = {
+    val root = Files.createTempDirectory("cdc-lock-stale").toString
+    writeOneEvent(root)
+    Files.createDirectories(lockOf(root).getParent)
+    Files.writeString(lockOf(root), holder)
+    startReplayAt(root).awaitTermination()
+    assert(CdcPipeline.loadState(s"$root/st").get.lastBatchId == 0L)
+    eventually() { assert(!Files.exists(lockOf(root))) }
+  }
+
+  test("instance lock: a lock naming a dead process is taken over (T35)") {
+    val child = new ProcessBuilder("true").start()
+    child.waitFor()
+    assertTakenOver(s"${child.pid()}:${java.util.UUID.randomUUID()}")
+  }
+
+  test("instance lock: a lock naming this JVM with a token no run holds is taken over (T35)") {
+    // what a crashed JVM leaves when its pid is recycled by this one
+    assertTakenOver(s"${ProcessHandle.current().pid()}:${java.util.UUID.randomUUID()}")
+  }
+
+  test("instance lock: a start whose query fails to start releases the lock (T35)") {
+    val root = Files.createTempDirectory("cdc-lock-failed-start").toString
+    writeOneEvent(root)
+    // a checkpoint location that is a regular file: the query cannot start
+    val ckFile = Files.createFile(java.nio.file.Paths.get(root, "ck-file")).toString
+    intercept[Exception](CdcPipeline.start(spark, s"$root/replay", s"$root/out", ckFile, s"$root/st"))
+    assert(!Files.exists(lockOf(root)), "a failed start must not keep the lock")
+    startReplayAt(root).awaitTermination()
+    assert(CdcPipeline.loadState(s"$root/st").get.lastBatchId == 0L)
   }
 }
