@@ -189,8 +189,7 @@ object Bench {
     println(s"""{"bench_diag":"queries_values","order":"headline","n":${results.size},"names_md5":"$namesMd5","v":$vals}""")
     println(tiny)
     // Sidecar copy (full form, with iqr): the durable artifact regardless
-    // of how stdout gets truncated (same pattern as ScaleRehearsal's
-    // BENCH_sf1.json).
+    // of how stdout gets truncated.
     // memo_build_late: builds made after the warmup (a query whose warmup
     // failed builds its memos in timed rep 1, and that rep's time holds them)
     def secsJson(m: Map[String, Double]): String = m.toSeq.sortBy(-_._2).map { case (tag, s) =>

@@ -14,18 +14,16 @@ import org.apache.spark.sql.functions._
   *
   * Every stage is individually oracle-checked in the registry; this
   * object owns the COMPOSITION, which until r11 lived copy-pasted in
-  * `CurationPipelineSpec` and `ScaleRehearsal` (exactly the drift
+  * `CurationPipelineSpec` and a scale harness (exactly the drift
   * hazard a user-facing chain must not have). Composition contracts,
   * spec-pinned: stages connect on `doc_id` without schema friction, a
   * doc with no embedding row passes SemDeDup through (curation must
   * not silently drop data a side table lacks coverage for), exported
   * shards hold contiguous positions 0..n−1 with nothing lost or
   * duplicated, and a re-run writes byte-identical shard content — what
-  * makes a 100 TB export resumable and auditable. Scale behavior is
-  * rehearsed composed (not per-stage) at 10×/100× under the
-  * flip/broadcast audit; every stage is pay-once via [[SharedFrames]]
-  * memos, so the chain's cost is the sum of its stages, not the
-  * product of its recomputations.
+  * makes a 100 TB export resumable and auditable. Every stage is
+  * pay-once via [[SharedFrames]] memos, so the chain's cost is the sum
+  * of its stages, not the product of its recomputations.
   */
 object CurationPipeline {
 
@@ -43,10 +41,9 @@ object CurationPipeline {
 
   /** The staged chain as (stage name, surviving-corpus frame) pairs,
     * cumulative — each frame filters the previous one. Exposed
-    * separately from [[run]] so audits and scale rehearsals can execute
-    * and plan-walk each stage; `stages(...).last._2` is the clean
-    * corpus [[run]] exports. Pass `embeddings = None` to skip SemDeDup
-    * (a text-only corpus). */
+    * separately from [[run]] so audits can execute and plan-walk each
+    * stage; `stages(...).last._2` is the clean corpus [[run]] exports.
+    * Pass `embeddings = None` to skip SemDeDup (a text-only corpus). */
   def stages(docs: DataFrame, embeddings: Option[DataFrame],
       cfg: Config): Seq[(String, DataFrame)] = {
     val kept = docs.join(

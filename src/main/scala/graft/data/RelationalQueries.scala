@@ -206,8 +206,6 @@ object RelationalQueries {
     * stream, q32's blocked dense scan with the threshold otherwise —
     * both exact, row-identical (spec-pinned on phased data where the
     * pruned plan engages AND on this corpus where the dense plan wins).
-    * The rehearsal reports the measured ratios (`q32b_prune`) rather
-    * than assuming either regime.
     *
     * The doc above describes the PRUNED plan ([[rangePruned]]); the
     * dense plan is [[rangeDense]]; [[activityRangeOn]] is the selector
@@ -333,42 +331,6 @@ object RelationalQueries {
 
   private[graft] def activityRange(spark: SparkSession, dir: String): DataFrame =
     activityRangeOn(activityProfiles(spark, dir)._1)
-
-  /** q32b's prune audit for the scale rehearsal: (full candidate-
-    * generation incidence volume, prefix-filtered incidence volume,
-    * distinct candidate pairs ON A QUERY SAMPLE, sampled all-pairs). The
-    * incidence volumes mirror [[rangeSelector]]'s inputs exactly (64-row
-    * aggs, all query users). The distinct-candidate count is audit-only
-    * and costs the candidate join the selector exists to avoid paying
-    * blindly — so the audit STRIDES the query side deterministically
-    * until its pair volume fits `maxAuditPairs` (the cand/all RATIO is a
-    * per-query-user average, so a strided sample measures it unbiased;
-    * at the gates the stride is 1 and the audit is exhaustive). */
-  private[graft] def activityRangeStats(spark: SparkSession, dir: String,
-      maxAuditPairs: Long = 100000000L): (Long, Long, Long, Long) = {
-    val (sparse, _) = activityProfiles(spark, dir)
-    val dense = activityVectors(spark, dir)
-    val idx = indexedPostings(sparse)
-    val qCnt = sparse.filter(col("user_id") % 5 === 0)
-      .groupBy("bucket").agg(count(lit(1)).as("cq"))
-    def inc(side: DataFrame): Long =
-      side.groupBy("bucket").agg(count(lit(1)).as("ci"))
-        .join(qCnt, "bucket")
-        .agg(sum(expr("ci * cq"))).collect()(0).getLong(0)
-    val (nAll, nQ) = SharedFrames.memoValue(dense, "q32-row-counts") {
-      (dense.count(), dense.filter(col("user_id") % 5 === 0).count())
-    }
-    val stride = math.max(1L,
-      math.ceil(nAll.toDouble * nQ / maxAuditPairs).toLong)
-    val qSample = sparse.filter(col("user_id") % 5 === 0 &&
-      expr(s"pmod(user_id div 5, ${stride}L) = 0"))
-      .select(col("user_id").as("q_user"), col("bucket"))
-    val nQs = qSample.select("q_user").distinct().count()
-    val nCand = idx.join(qSample, "bucket")
-      .filter(col("user_id") =!= col("q_user"))
-      .select("q_user", "user_id").distinct().count()
-    (inc(sparse.select("user_id", "bucket")), inc(idx), nCand, nAll * nQs - nQs)
-  }
 
   private val priceD = "CAST(l_extendedprice AS DECIMAL(12,2))"
   private val discD = "CAST(l_discount AS DECIMAL(12,2))"

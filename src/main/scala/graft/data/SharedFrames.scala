@@ -185,8 +185,7 @@ object SharedFrames {
     // no-op and the non-recomputable blocks would otherwise free only
     // when the ContextCleaner GCs the RDD reference. Unpersisting the
     // LogicalRDD's OWN rdd (the exact RDD localCheckpoint persisted)
-    // makes the between-family release the 100× rehearsal depends on
-    // deterministic rather than GC-timed.
+    // makes the release deterministic rather than GC-timed.
     cache.values.foreach { h =>
       try {
         h.value.queryExecution.analyzed.foreach {

@@ -105,8 +105,7 @@ object SkewOps {
 
   /** Deterministic block assignment: hash of the row's ORIGINAL columns
     * mod the key's block count (captured before any join widens the
-    * frame, so [[gridBlockStats]] reproduces [[gridJoin]]'s assignment
-    * exactly). */
+    * frame). */
   private def blockId(df: DataFrame, n: org.apache.spark.sql.Column) =
     pmod(hash(df.columns.toIndexedSeq.map(col): _*), n)
 
@@ -188,8 +187,8 @@ object SkewOps {
 
   /** Per-task audit of [[pairBlockJoin]]'s grid — realized pair count of
     * every (bf, bp) task (Σ_key factRows(key, bf) · probeRows(key, bp)),
-    * computed with the same hash assignment: the rehearsal gate that the
-    * worst task stays near pairVolume / (F·P). */
+    * computed with the same hash assignment, so a check can hold the
+    * worst task near pairVolume / (F·P). */
   def pairBlockStats(fact: DataFrame, probe: DataFrame, key: String,
       factEntity: String, probeEntity: String,
       factBlocks: Int, probeBlocks: Int): DataFrame = {
@@ -201,32 +200,5 @@ object SkewOps {
       .groupBy(col(key), col("__bp")).agg(count(lit(1)).as("cp"))
     f.join(p, key)
       .groupBy("__bf", "__bp").agg(sum(expr("cf * cp")).as("task_pairs"))
-  }
-
-  /** Per-key audit of [[gridJoin]]'s task grid — the scale-rehearsal gate
-    * that per-task pair work stays bounded: for each key, the grid
-    * dimensions (nf × np), the LARGEST realized block on each side, and
-    * their product = the worst single task's pair count under this key.
-    * Uses the same hash assignment as gridJoin, so the numbers are the
-    * real task sizes, not estimates. Expected block size is ≤
-    * rowsPerBlock; hash non-uniformity can push a block somewhat over,
-    * which is why the gate carries slack rather than an exact cap. */
-  def gridBlockStats(fact: DataFrame, probe: DataFrame, key: String,
-      rowsPerBlock: Int = 4096): DataFrame = {
-    val fCnt = blockCounts(fact, key, rowsPerBlock, "__nf")
-    val pCnt = blockCounts(probe, key, rowsPerBlock, "__np")
-    val fBlocks = fact.join(broadcast(fCnt), key)
-      .withColumn("__bf", blockId(fact, col("__nf")))
-      .groupBy(col(key), col("__nf"), col("__bf")).agg(count(lit(1)).as("c"))
-      .groupBy(key, "__nf").agg(max("c").as("max_fact_block"))
-    val pBlocks = probe.join(broadcast(pCnt), key)
-      .withColumn("__bp", blockId(probe, col("__np")))
-      .groupBy(col(key), col("__np"), col("__bp")).agg(count(lit(1)).as("c"))
-      .groupBy(key, "__np").agg(max("c").as("max_probe_block"))
-    fBlocks.join(pBlocks, key)
-      .select(col(key), col("__nf").as("nf"), col("__np").as("np"),
-        col("max_fact_block"), col("max_probe_block"),
-        (col("max_fact_block") * col("max_probe_block")).as("max_task_pairs"),
-        (col("__nf") * col("__np")).cast("long").as("grid_cells"))
   }
 }

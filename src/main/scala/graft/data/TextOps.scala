@@ -1608,14 +1608,13 @@ object TextOps {
       pageRankNearDupChain(documents, iters)
     }
 
-  /** The un-memoized chain, reachable for the 10× scale rehearsal (the
-    * memoized form executes as a checkpoint scan, so the rehearsal's plan
-    * audit must walk THIS). Returns the LAZY terminal frame (rounds
-    * 1..iters are eagerly checkpointed, each freeing its predecessor's
-    * blocks as soon as it materializes) plus a release thunk the caller
-    * runs once the terminal frame is executed/checkpointed — it frees the
-    * edge and node persists and the last round's checkpoint. */
-  private[graft] def pageRankNearDupChain(documents: DataFrame,
+  /** The un-memoized chain behind [[pageRankNearDup]]. Returns the LAZY
+    * terminal frame (rounds 1..iters are eagerly checkpointed, each
+    * freeing its predecessor's blocks as soon as it materializes) plus the
+    * release thunk `memoReleasing` runs once the terminal frame is
+    * checkpointed — it frees the edge and node persists and the last
+    * round's checkpoint. */
+  private def pageRankNearDupChain(documents: DataFrame,
       iters: Int): (DataFrame, () => Unit) = {
     val Q = 1L << 30
     val pairs = simhashNear(documents).select("doc_a", "doc_b")

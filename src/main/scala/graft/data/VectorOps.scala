@@ -993,8 +993,7 @@ object VectorOps {
   /** Probe the cells of a [[writeCellPartitioned]] layout with an explicit
     * query vector: the literal `cell IN (...)` predicate is a static
     * partition filter, so BOTH scans' file lists are the probed cell
-    * directories only (asserted by `IvfLayoutSpec`; re-measured at 10× by
-    * `tools.ScaleRehearsal`).
+    * directories only (asserted by `IvfLayoutSpec`).
     *
     * Contract: `cells` must contain the query's own cell — true for every
     * nProbe ≥ 1 probe list, whose first element IS the query's nearest

@@ -20,8 +20,8 @@ import org.apache.spark.sql.types._
   * never a window/sort over the changelog; [[corpusFromSnapshot]] is a
   * narrow per-row `from_json` projection. Restart/DDL tolerance comes
   * from the planes themselves (checkpoint + state-mirror + per-position
-  * typing), which is exactly what `CdcCurationComposedSpec` and the
-  * composed rehearsal assert: crash-restart mid-feed and an ALTER
+  * typing), which is exactly what `CdcCurationComposedSpec` asserts:
+  * crash-restart mid-feed and an ALTER
   * mid-stream leave the exported shards byte-identical to an
   * uninterrupted run's.
   */
@@ -92,9 +92,8 @@ object CdcCuration {
   }
 
   // ---- wire-feed builders (documents table → Debezium events) ---------
-  // Shared by the composed rehearsal and the c1 registry query so the
-  // feed format cannot drift between them; the spec keeps its own
-  // hand-built events so a builder bug here still fails a gate there.
+  // Used by the c1 registry query; `CdcCurationComposedSpec` keeps its
+  // own hand-built events so a builder bug here still fails a gate there.
 
   /** Debezium data events from documents-shaped rows, JSON assembled by
     * the engine (text is arbitrary — never string-spliced). `posCol`

@@ -9,6 +9,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, T
 import org.apache.spark.sql.types._
 import org.json4s.jackson.JsonMethods
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.concurrent.atomic.AtomicReference
 
 /** The streaming shape of the engine (SURVEY §3.1). Both ingress paths —
   * file replay ([[start]]) and the Debezium wire feed ([[startWire]]) —
@@ -122,9 +123,16 @@ object CdcPipeline {
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Lock tokens of the runs in this JVM, from before their lock exists
-    * until their termination listener has written the clean flag. */
-  private val heldTokens = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  /** The runs in this JVM by lock token, from before their lock exists
+    * until their termination listener has written the clean flag; each
+    * holds its query once `start()` has returned it. */
+  private val heldTokens =
+    new java.util.concurrent.ConcurrentHashMap[String, AtomicReference[StreamingQuery]]()
+
+  /** How long a start waits for a stopped run of this JVM to release its
+    * lock. The release is one state save and one delete, but it waits its
+    * turn behind every earlier event on Spark's listener bus. */
+  private val ReleaseWaitMs = 30000L
 
   /** T35 — single-instance lock with ZK-ephemeral-style stale takeover
     * (the reference holds a ZooKeeper lock for the whole run;
@@ -132,9 +140,13 @@ object CdcPipeline {
     * `pid:<uuid>`, and the lock file holds it unchanged until the run's
     * termination listener releases it. A holder is live while its pid is
     * this JVM's and its token is in [[heldTokens]], or while its pid is
-    * another live process. Any other holder is stale and its lock is
-    * taken over: a dead pid, this JVM's pid with a token no run here
-    * holds (a crashed JVM whose pid was recycled), no parseable pid.
+    * another live process. A live holder of this JVM whose query has
+    * stopped is releasing: `awaitTermination()` returns before Spark's
+    * asynchronous listener bus runs the listener that saves the clean
+    * flag and frees the lock, so a restart right after it waits up to
+    * [[ReleaseWaitMs]] for that release. Any other holder is stale and its
+    * lock is taken over: a dead pid, this JVM's pid with a token no run
+    * here holds (a crashed JVM whose pid was recycled), no parseable pid.
     * Returns the token. */
   private def acquireLock(stateDir: String): String = {
     val selfPid = ProcessHandle.current().pid()
@@ -146,7 +158,7 @@ object CdcPipeline {
     // reader ever sees a lock without its token
     val mine = Files.writeString(
       Files.createDirectories(Paths.get(stateDir)).resolve(s".lock.$token"), token)
-    heldTokens.add(token)
+    heldTokens.put(token, new AtomicReference[StreamingQuery]())
     var attempts = 0
     try {
       while (!linked(f, mine)) {
@@ -155,18 +167,28 @@ object CdcPipeline {
         // the holder may release between our failed link and this read
         try {
           val holder = Files.readString(f).trim
-          val live = holder.split(":", 2).head.toLongOption.exists { pid =>
-            if (pid == selfPid) heldTokens.contains(holder)
-            else ProcessHandle.of(pid).map[Boolean](_.isAlive).orElse(false)
+          val releasing = Option(heldTokens.get(holder)).flatMap(q => Option(q.get))
+            .exists(!_.isActive)
+          if (releasing) {
+            val deadline = System.currentTimeMillis() + ReleaseWaitMs
+            while (heldTokens.containsKey(holder) && System.currentTimeMillis() < deadline)
+              Thread.sleep(10)
+            if (heldTokens.containsKey(holder)) throw new IllegalStateException(
+              s"a stopped pipeline instance ($holder) still holds the lock on $stateDir")
+          } else {
+            val live = holder.split(":", 2).head.toLongOption.exists { pid =>
+              if (pid == selfPid) heldTokens.containsKey(holder)
+              else ProcessHandle.of(pid).map[Boolean](_.isAlive).orElse(false)
+            }
+            if (live) throw new IllegalStateException(
+              s"another pipeline instance ($holder) holds the lock on $stateDir")
+            // stale: take over by atomically MOVING the observed lock aside
+            // — only one stealer's move can succeed, so a second stealer can
+            // never delete the winner's fresh lock (a plain delete could)
+            val aside = f.resolveSibling(s".lock.stale.${java.util.UUID.randomUUID()}")
+            Files.move(f, aside, StandardCopyOption.ATOMIC_MOVE)
+            Files.deleteIfExists(aside)
           }
-          if (live) throw new IllegalStateException(
-            s"another pipeline instance ($holder) holds the lock on $stateDir")
-          // stale: take over by atomically MOVING the observed lock aside
-          // — only one stealer's move can succeed, so a second stealer can
-          // never delete the winner's fresh lock (a plain delete could)
-          val aside = f.resolveSibling(s".lock.stale.${java.util.UUID.randomUUID()}")
-          Files.move(f, aside, StandardCopyOption.ATOMIC_MOVE)
-          Files.deleteIfExists(aside)
         } catch { case _: java.nio.file.NoSuchFileException => () } // freed or taken meanwhile
       }
       token
@@ -427,28 +449,22 @@ object CdcPipeline {
   /** The setup both entry points share: catalog restore (T30), the state
     * mirror, the source stream, checkpoint and trigger, the batchId
     * dedupe (T31) and the state save. Lifecycle: take the instance lock
-    * (T35), install the termination listener, start the query. The run's
-    * durable state is ONE [[State]] value, `committed`: each committed
-    * batch saves a new one, and the listener saves it once more with the
-    * clean-shutdown flag (T34) before it releases the lock — Spark posts
-    * termination on its asynchronous listener bus, so the flag must be
-    * written while the lock still keeps a new run of this `stateDir` out.
+    * (T35), restore the state under it, install the termination listener,
+    * start the query. The run's durable state is ONE [[State]] value,
+    * `committed`: each committed batch saves a new one, and the listener
+    * saves it once more with the clean-shutdown flag (T34) before it
+    * releases the lock — Spark posts termination on its asynchronous
+    * listener bus, so the flag must be written while the lock still keeps
+    * a new run of this `stateDir` out.
     * A `start()` that throws releases the lock before rethrowing. */
   private def run(spark: SparkSession, schema: StructType, src: Ingress, sourceDir: String,
       outDir: String, checkpointDir: String, stateDir: String,
       maxFilesPerTrigger: Int,
       onProgress: StreamingQueryListener.QueryProgressEvent => Unit = _ => ()
   ): StreamingQuery = {
-    val catalog = new SchemaCatalog(piiTables = CdcSqlFragments.PII_TABLES.toSet)
-    @volatile var committed = loadState(stateDir)
-    committed.foreach(s => catalog.restore(s.catalogJson)) // T30 recovery
-
-    val stream = src.stream(spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(sourceDir))
-
     val token = acquireLock(stateDir)
+    val catalog = new SchemaCatalog(piiTables = CdcSqlFragments.PII_TABLES.toSet)
+    @volatile var committed: Option[State] = None
     @volatile var runId: String = null
     val listener = new StreamingQueryListener {
       import StreamingQueryListener._
@@ -463,30 +479,40 @@ object CdcPipeline {
           spark.streams.removeListener(this)
         }
     }
-    spark.streams.addListener(listener)
-    val query = try stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // T31: a batch at or below the committed one is a replay after a
-        // restart whose side effects already committed — skip it
-        // (offset-dedupe parity)
-        if (committed.forall(batchId > _.lastBatchId)) {
-          val position = commit(spark, src, batch, batchId, catalog, outDir)
-          val s = State(batchId, catalog.snapshotJson, cleanShutdown = false,
-            mergePosition(committed.fold(Map.empty[String, String])(_.position), position))
-          saveState(stateDir, s)
-          committed = Some(s)
+    val query = try {
+      // read under the lock: a run of this stateDir that has just stopped
+      // has saved its clean flag by now
+      committed = loadState(stateDir)
+      committed.foreach(s => catalog.restore(s.catalogJson)) // T30 recovery
+      spark.streams.addListener(listener)
+      val stream = src.stream(spark.readStream
+        .schema(schema)
+        .option("maxFilesPerTrigger", maxFilesPerTrigger)
+        .parquet(sourceDir))
+      stream.writeStream
+        .option("checkpointLocation", checkpointDir)
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          // T31: a batch at or below the committed one is a replay after a
+          // restart whose side effects already committed — skip it
+          // (offset-dedupe parity)
+          if (committed.forall(batchId > _.lastBatchId)) {
+            val position = commit(spark, src, batch, batchId, catalog, outDir)
+            val s = State(batchId, catalog.snapshotJson, cleanShutdown = false,
+              mergePosition(committed.fold(Map.empty[String, String])(_.position), position))
+            saveState(stateDir, s)
+            committed = Some(s)
+          }
+          ()
         }
-        ()
-      }
-      .start()
-    catch {
+        .start()
+    } catch {
       case e: Throwable =>
         spark.streams.removeListener(listener)
         releaseLock(stateDir, token)
         throw e
     }
+    heldTokens.get(token).set(query) // before runId: nothing can release it yet
     runId = query.runId.toString
     query
   }
@@ -687,14 +713,13 @@ object CdcPipeline {
       throw new java.io.IOException(s"failed to publish $stage -> $target")
   }
 
-  /** Tables per sink write-group in [[startWire]]: Catalyst plan-build
-    * cost is ~linear in a union's branch count but the CONSTANT grows as
-    * it re-walks one ever-wider plan — the r7 wire rehearsal measured
-    * 1.58× per-table cost per table-count doubling through one
-    * all-tables union (11.5 s to plan a 200-table batch). Planning and
-    * writing per ~25-table group keeps every union narrow, so per-table
-    * plan cost stays flat as deployments widen (re-measured flat
-    * 100→200→400 by [[graft.tools.WireRehearsal]]). */
+  /** Tables per sink write-group in [[startWire]]: Catalyst's plan-build
+    * cost per union branch grows as it re-walks one ever-wider plan.
+    * [[graft.tools.WireRehearsal]], three runs each on a 4-core machine:
+    * one all-tables union took 45.8-49.5 s to plan a 400-table batch, its
+    * per-table cost rising 1.86-2.18× per table-count doubling; 25-table
+    * groups took 6.2-6.8 s, flat at 0.95-1.06×. Planning and writing per
+    * group keeps every union narrow as deployments widen. */
   private[graft] val WireTableGroupSize = 25
 
   /** Shard table-keyed projections into unions of ≤ [[WireTableGroupSize]]

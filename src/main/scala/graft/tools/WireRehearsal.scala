@@ -121,8 +121,7 @@ object WireRehearsal {
 
       // ---- (b) the write (same sharded sink contract as startWire:
       // clear the dir, append per group). NOTE: DataFrameWriter wraps
-      // each frame in a SEPARATE QueryExecution (the
-      // ScaleRehearsal.execute scaladoc documents the same trap), so
+      // each frame in a SEPARATE QueryExecution, so
       // write_sec INCLUDES a second static plan build plus AQE
       // finalization plus execution+I/O — it bounds total per-batch cost
       // from above; plan_sec isolates the static planning share.

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,26 +26,20 @@ class PlanSpec extends AnyFunSuite {
       qe.executedPlan)
   }
 
-  private def countShuffles(p: SparkPlan): Int = {
-    def walk(n: SparkPlan): Int = {
-      val self = n match {
-        case _: ShuffleExchangeExec => 1
-        case _ => 0
-      }
-      val kids = n.children.map(walk).sum
-      // on an EXECUTED AQE plan every exchange hides inside a leaf
-      // QueryStageExec — without descending into it this count is 0 for
-      // any post-collect plan and every <= bound is vacuous
-      val aqe = n match {
-        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-        case s: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          walk(s.plan)
-        case _ => 0
-      }
-      self + kids + aqe
-    }
-    walk(p)
-  }
+  /** Every node of an executed plan. On an EXECUTED AQE plan every
+    * exchange hides inside a leaf QueryStageExec, so the walk descends
+    * into the adaptive plan's final form and into each query stage —
+    * without that, any count over a post-collect plan is 0 and every
+    * bound on it is vacuous. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] =
+    p +: (p.children.flatMap(nodes) ++ (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case _ => Nil
+    }))
+
+  private def countShuffles(p: SparkPlan): Int =
+    nodes(p).count(_.isInstanceOf[ShuffleExchangeExec])
 
   test("CDC chain prunes the scan to needed columns (T2/T3/T8)") {
     // the whitelist/blacklist predicates are CASE expressions over derived
@@ -377,6 +371,32 @@ class PlanSpec extends AnyFunSuite {
     assert(countShuffles(p) <= 3,
       s"bootstrap materialize grew extra shuffles (${countShuffles(p)}):\n" +
         s.linesIterator.take(40).mkString("\n"))
+  }
+
+  test("dedup, export, relational and events families: no cartesian, no nested loop") {
+    // A CartesianProduct is the all-pairs shape at any scale; a
+    // BroadcastNestedLoopJoin here would be a keyed join that lost its
+    // key (none of these queries crosses a bounded frame), and the
+    // executed AQE plan is where a runtime flip to either would show.
+    val families = Seq(
+      "d3_dedup_minhash_lsh", "d6_dedup_clusters", "x27_duplicated_spans",
+      "x32_span_scrub", "x26_bpe_merges", "d2_dedup_ngram_jaccard",
+      "x22_boilerplate_lines", "x15_pack_sequences", "x34_shard_export",
+      "x35_budget_cap", "d7_simhash_near",
+      "q03_shipping_priority", "q05_local_supplier_volume",
+      "q13_semi_anti_join", "q09_product_type_profit",
+      "q16_supplier_parts_count", "q20_part_promotion",
+      "q02_min_cost_supplier",
+      "q32_activity_similarity", "q32b_activity_range",
+      "q33_session_funnel", "q34_rate_anomaly", "q11_user_sessions")
+    val offending = families.flatMap { name =>
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      df.collect() // force AQE to finalize
+      nodes(df.queryExecution.executedPlan).map(_.nodeName)
+        .filter(n => n.contains("CartesianProduct") || n.contains("BroadcastNestedLoopJoin"))
+        .map(n => s"$name: $n")
+    }
+    assert(offending.isEmpty, offending.mkString("\n"))
   }
 
   // ------------------------------------------------------------------

@@ -660,6 +660,30 @@ class CdcPipelineSpec extends AnyFunSuite {
     assert(stagingDirs(s"$matRoot/mat").isEmpty, "a clean materializing run leaves no staging dir")
   }
 
+  test("wire sink groups: at most WireTableGroupSize tables per union, each table's projections in one") {
+    import spark.implicits._
+    // 60 tables span three groups; every seventh has two catalog answers
+    // (two projections), and the projections arrive shuffled, so a
+    // table's two projections are never adjacent
+    val slices = new scala.util.Random(7).shuffle((0 until 60).flatMap { i =>
+      val table = f"t$i%02d"
+      (0 until (if (i % 7 == 0) 2 else 1)).map { answer =>
+        ("db0", table) -> Seq.tabulate(3)(r => (s"db0.$table", answer, r)).toDF("topic", "answer", "r")
+      }
+    })
+    val groups = CdcPipeline.groupedUnions(slices)
+    val rows = groups.map(_.as[(String, Int, Int)].collect().toSeq)
+    val topics = rows.map(_.map(_._1).toSet)
+    assert(groups.size == 3, s"60 tables in ${groups.size} groups")
+    assert(topics.forall(_.size <= CdcPipeline.WireTableGroupSize),
+      s"group sizes ${topics.map(_.size)}")
+    val homes = topics.flatten.groupBy(identity).view.mapValues(_.size).toMap
+    assert(homes.size == 60 && homes.values.forall(_ == 1),
+      s"tables outside exactly one group: ${homes.filter(_._2 != 1)}")
+    val input = slices.flatMap(_._2.as[(String, Int, Int)].collect())
+    assert(rows.flatten.sorted == input.sorted)
+  }
+
   test("wire mode: mid-batch CREATE, RENAME TABLE and DROP TABLE type each row at its position") {
     val root = Files.createTempDirectory("cdc-wire-ddl").toString
     // one batch: rows before and after each statement
@@ -779,6 +803,52 @@ class CdcPipelineSpec extends AnyFunSuite {
     }
     eventually() { assert(!Files.exists(lockOf(root))) }
     startReplayAt(root).awaitTermination()
+    assert(CdcPipeline.loadState(s"$root/st").get.lastBatchId == 1L)
+  }
+
+  test("instance lock: a restart right after awaitTermination waits for the stopped run's release (T35)") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("cdc-lock-release").toString
+    writeOneEvent(root)
+    // registered before the pipeline's own listener, this one holds up the
+    // asynchronous streaming listener bus, so the first run's termination
+    // listener (clean flag, lock release) runs only once `release` opens
+    val terminated = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val blocker = new org.apache.spark.sql.streaming.StreamingQueryListener {
+      import org.apache.spark.sql.streaming.StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = {
+        terminated.countDown()
+        release.await(2, java.util.concurrent.TimeUnit.MINUTES)
+      }
+    }
+    spark.streams.addListener(blocker)
+    @volatile var restored: Option[CdcPipeline.State] = None
+    try {
+      startReplayAt(root).awaitTermination()
+      assert(terminated.await(1, java.util.concurrent.TimeUnit.MINUTES))
+      assert(Files.exists(lockOf(root)), "the stopped run must still hold the lock here")
+      // the second run has a batch of its own; its state.json at that
+      // batch is the one it restored (nothing else writes it under the lock)
+      Seq((101L, 6L, "signup", 2.0, """{"k": 3}""", 200000L))
+        .toDF("event_id", "user_id", "event_type", "value", "props", "ts_us")
+        .coalesce(1).write.mode("append").parquet(s"$root/replay")
+      CdcPipeline.afterDdlHook = _ => restored = CdcPipeline.loadState(s"$root/st")
+      val second = scala.concurrent.Future(startReplayAt(root))(
+        scala.concurrent.ExecutionContext.global)
+      Thread.sleep(2000) // the second start reaches the held lock first
+      release.countDown()
+      scala.concurrent.Await.result(second, scala.concurrent.duration.Duration(2, "min"))
+        .awaitTermination()
+    } finally {
+      release.countDown()
+      spark.streams.removeListener(blocker)
+      CdcPipeline.afterDdlHook = _ => ()
+    }
+    assert(restored.exists(s => s.cleanShutdown && s.lastBatchId == 0L),
+      s"the second run must restore the first run's clean final state, got $restored")
     assert(CdcPipeline.loadState(s"$root/st").get.lastBatchId == 1L)
   }
 

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.Tables
+import org.apache.spark.sql.{DataFrame, functions}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -1217,6 +1218,95 @@ class StreamingAnalyticsSpec extends AnyFunSuite {
       assert(postFiles(c) == fsBefore, s"untouched cell $c was rewritten")
     assert(rowsOf(s"$dir/live") == rowsBefore,
       "compaction must preserve the row set exactly")
+  }
+
+  /** Write `df` as `waves` parquet directories, one per value of its
+    * integer `wave` column. */
+  private def writeWaves(df: DataFrame, dir: String, waves: Int): Seq[String] =
+    (0 until waves).map { w =>
+      val d = s"$dir/w$w"
+      df.filter(col("wave") === w).drop("wave").coalesce(1).write.parquet(d)
+      d
+    }
+
+  /** Replay wave directories through `mk` into a checkpointed parquet
+    * sink and return every output row, sorted. Each wave's files are
+    * staged in a dot-prefixed directory, which the `w*` source glob does
+    * not match, and renamed in whole, so each wave is exactly one data
+    * micro-batch in every run. With `restartAfter` ≥ 0 the query stops
+    * after that wave and a new one starts from the same checkpoint. */
+  private def replayWaves(waveDirs: Seq[String], runDir: String,
+      restartAfter: Int = -1)(mk: DataFrame => DataFrame): Seq[String] = {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import scala.jdk.CollectionConverters._
+    val feed = Files.createDirectories(Paths.get(runDir, "feed"))
+    val stream = spark.readStream
+      .schema(spark.read.parquet(waveDirs.head).schema)
+      .parquet(s"$feed/w*")
+    def start() = mk(stream).writeStream.format("parquet")
+      .option("path", s"$runDir/out")
+      .option("checkpointLocation", s"$runDir/ckpt")
+      .outputMode("append").start()
+    var q = start()
+    try waveDirs.zipWithIndex.foreach { case (wd, w) =>
+      val stage = Files.createDirectories(feed.resolve(s".stage_w$w"))
+      Files.list(Paths.get(wd)).iterator().asScala
+        .filter(_.getFileName.toString.startsWith("part-"))
+        .foreach(f => Files.copy(f, stage.resolve(f.getFileName)))
+      Files.move(stage, feed.resolve(s"w$w"), StandardCopyOption.ATOMIC_MOVE)
+      q.processAllAvailable()
+      if (w == restartAfter) { q.stop(); q = start() }
+    } finally q.stop()
+    spark.read.parquet(s"$runDir/out").collect().map(_.toString).sorted.toSeq
+  }
+
+  test("keyed-state analytics streams resume from a mid-wave checkpoint row-identical to an uninterrupted run") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("stream-resume").toString
+    val sfDir = "/root/testdata/sf0.001"
+    val waves = 4
+    val waveUs = min(10)
+    // event time advances 10 minutes per wave, so each wave closes the
+    // previous wave's windows and the watermark state crosses the stop
+    val docsDf = Tables.documents(spark, sfDir)
+    val docs = docsDf
+      .withColumn("wave", pmod(hash(col("doc_id")), lit(waves)))
+      .withColumn("ts_us", lit(T0) + col("wave").cast("long") * lit(waveUs) +
+        pmod(hash(col("doc_id")), lit(waveUs.toInt)).cast("long"))
+    val docWaves = writeWaves(docs, s"$dir/docs", waves)
+    // events arrive in time order (the transition stream's contract):
+    // wave = time quartile
+    val ev = Tables.events(spark, sfDir)
+    val Seq(lo, hi) = ev.agg(functions.min("ts_us"), max("ts_us")).collect()(0).toSeq
+      .map(_.asInstanceOf[Long])
+    val evWaves = writeWaves(
+      ev.withColumn("wave", ((col("ts_us") - lit(lo)) * waves / lit(hi - lo + 1)).cast("int")),
+      s"$dir/events", waves)
+
+    val benchHashes = graft.data.TextOps.benchmarkShingleHashes(docsDf)
+    val weights = graft.data.TextOps.dsirBucketWeightArray(docsDf)
+    val chains: Seq[(String, Seq[String], DataFrame => DataFrame)] = Seq(
+      ("curation_admission", docWaves, df =>
+        StreamingAnalytics.curationAdmissionStream(
+          df, benchHashes, weights, budgetTokens = 200L).toDF()),
+      ("qsketch_ingest", docWaves, df =>
+        StreamingAnalytics.qsketchIngestStream(
+          df, k = 8, windowLength = "1 minute", watermarkDelay = "2 minutes")),
+      ("phash_keepers", docWaves, df =>
+        StreamingAnalytics.phashKeeperStream(df.select("doc_id", "text")).toDF()),
+      ("event_transitions", evWaves, df =>
+        StreamingAnalytics.eventTransitionsStream(
+          df.select("user_id", "event_type", "ts_us", "event_id")
+            .as[StreamingAnalytics.TransEv]).toDF()))
+    chains.foreach { case (name, waveDirs, mk) =>
+      val whole = replayWaves(waveDirs, s"$dir/$name")(mk)
+      val resumed = replayWaves(waveDirs, s"$dir/${name}_resumed",
+        restartAfter = waves / 2 - 1)(mk)
+      assert(whole.nonEmpty, s"$name emitted nothing")
+      assert(resumed == whole,
+        s"$name: the resumed run diverged (${resumed.size} vs ${whole.size} rows): " +
+          s"only-resumed=${resumed.diff(whole).take(3)} only-whole=${whole.diff(resumed).take(3)}")
+    }
   }
 
   private def w1ToDf(spark: org.apache.spark.sql.SparkSession,
