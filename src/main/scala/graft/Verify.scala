@@ -11,7 +11,7 @@ object Verify {
     val only = args.drop(2).toSet
     // Tables.session: installs GraftExtensions (native functions some
     // queries need) + the nanosAsLong parquet flag
-    val spark = Tables.session("graft-verify", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = Tables.session("graft-verify")
     new java.io.File(outDir).mkdirs()
     var failed = 0
     SparkEntry.queries

@@ -37,9 +37,6 @@ class SchemaCatalog(piiTables: Set[String] = Set.empty) {
     * schema returns the existing id (reference schema_wrapper.py:97-141
     * registration idempotence). */
   private var byFingerprint = Map.empty[(TableId, String), Int]
-  /** Process-wide schema cache (reference schema_wrapper.py:35-42); cleared
-    * wholesale on renames (T17). */
-  private var cache = Map.empty[TableId, TableSchema]
   private var versionCounter = 0
   /** Compatibility verdict of every schema EVOLUTION (ALTER on a known
     * table), in order — what the reference's registry would have ruled at
@@ -57,7 +54,6 @@ class SchemaCatalog(piiTables: Set[String] = Set.empty) {
   def version: Int = versionCounter
   def compatLog: Seq[(TableId, SchemaCompat.Report)] = synchronized(compatReports)
   def alterEvents: Seq[(TableId, Long)] = synchronized(alterHistory)
-  def cachedTables: Set[TableId] = cache.keySet
   def all: Map[TableId, TableSchema] = entries
 
   /** Key columns are part of schema identity: the same columns with a
@@ -72,24 +68,15 @@ class SchemaCatalog(piiTables: Set[String] = Set.empty) {
       byFingerprint += ((id, fp) -> sid)
       val ts = TableSchema(sid, struct, piiTables.contains(id.table), pkeys)
       entries += (id -> ts)
-      cache += (id -> ts)
       versionCounter += 1
       ts
     }
 
-  /** Cache lookup; miss falls back to the registry (the reference's miss
-    * path re-fetches SHOW CREATE + registers; data_event_handler.py:40-52). */
-  def lookup(id: TableId): Option[TableSchema] = synchronized {
-    cache.get(id).orElse {
-      val e = entries.get(id)
-      e.foreach(ts => cache += (id -> ts))
-      e
-    }
-  }
-
-  /** T17 — RENAME clears the whole cache (reference
-    * schema_event_handler.py:114-121, schema_wrapper.py:143-144). */
-  def invalidateCache(): Unit = synchronized { cache = Map.empty }
+  /** The table's current schema. The reference fronts its registry with a
+    * process-wide cache it clears on renames (T17, schema_wrapper.py:
+    * 35-42); here a rename moves the entry itself, so there is nothing to
+    * clear. */
+  def lookup(id: TableId): Option[TableSchema] = synchronized(entries.get(id))
 
   /** T22/T23 — apply a DDL statement to the tracked catalog; returns the
     * new TableSchema for schema-changing table DDL. `atEventId` (when ≥ 0)
@@ -131,7 +118,6 @@ class SchemaCatalog(piiTables: Set[String] = Set.empty) {
       case DropTableStatement(db, tbl) =>
         val id = TableId(cluster, db.getOrElse(defaultDb), tbl)
         entries -= id
-        cache -= id
         versionCounter += 1
         None
       case RenameTableStatement(renames) =>
@@ -139,7 +125,6 @@ class SchemaCatalog(piiTables: Set[String] = Set.empty) {
         // b` swaps); a pair whose table is unknown moves nothing. No ALTER
         // position is recorded: the columns, and so the payload version,
         // stay as they were.
-        invalidateCache()
         renames.flatMap { case ((fromDb, from), (toDb, to)) =>
           val id = TableId(cluster, fromDb.getOrElse(defaultDb), from)
           entries.get(id).map(ts =>
@@ -151,13 +136,11 @@ class SchemaCatalog(piiTables: Set[String] = Set.empty) {
 
   /** Both rename forms (`ALTER TABLE a RENAME TO b`, `RENAME TABLE a TO
     * b`): the entry moves to its new name, registered there with
-    * `struct`, and the whole cache is cleared (T17). */
+    * `struct` (T17). */
   private def move(from: TableId, to: TableId, struct: StructType,
       pkeys: Seq[String]): TableSchema = {
     entries -= from
-    val ts = register(to, struct, pkeys)
-    invalidateCache()
-    ts
+    register(to, struct, pkeys)
   }
 
   // ---- T25: snapshot / restore ---------------------------------------
@@ -240,7 +223,6 @@ class SchemaCatalog(piiTables: Set[String] = Set.empty) {
         }.toVector
       case _ => Vector.empty
     }
-    cache = Map.empty
     // the compat audit log is per-incarnation (it records THIS process's
     // ALTER rulings, not snapshot state); restoring must not leave a
     // previous incarnation's entries mixed into the new one

@@ -10,9 +10,9 @@ import org.apache.spark.sql.types._
   * rows through the pipeline; failure_recovery_test.py:227-349 requires
   * the result to survive restarts): a Debezium wire stream of an upstream
   * `documents` OLTP table flows through [[CdcPipeline.startWire]] (typed
-  * per-position by the evolving catalog, T22b), its committed batches
-  * materialize to the t13b latest-state snapshot, and that live corpus IS
-  * the input to [[graft.data.CurationPipeline]] — quality → dedup →
+  * per-position by the evolving catalog, T22b), the t13b latest-state
+  * query over its committed batches gives the live corpus, and that corpus
+  * IS the input to [[graft.data.CurationPipeline]] — quality → dedup →
   * decontaminate → budget → shard export with manifest verification.
   *
   * Scale: [[materializeWire]] is the t13b plan shape — one hash shuffle
@@ -39,35 +39,18 @@ object CdcCuration {
     StructField("n_chars", LongType)))
 
   /** t13b latest-state over a wire-mode output directory for one topic:
-    * per row identity (`idField` inside the typed payload JSON), keep the
-    * binlog-latest image by `max_by(pos_key)`; rows whose latest event is
-    * a delete are gone. Reads the committed `batch=<id>` dirs — the same
-    * changelog [[CdcPipeline.materializeBatch]] folds, expressed as one
-    * keyed aggregation so a 100 TB changelog shuffles once on identity
+    * per row identity (`topic` plus `idField` inside the typed payload
+    * JSON, as `row_id`), keep the binlog-latest image; rows whose latest
+    * event is a delete are gone. The same committed-changelog reader as
+    * [[CdcPipeline.readMaterialized]] ([[CdcPipeline.latestState]]): one
+    * keyed aggregation, so a 100 TB changelog shuffles once on identity
     * and never sorts. */
   def materializeWire(spark: SparkSession, outDir: String, topic: String,
-      idField: String = "doc_id"): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(outDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"wire output dir $outDir does not exist")
-    val batchDirs = fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .map(_.getPath.toString)
-    require(batchDirs.nonEmpty, s"no committed batch= dirs under $outDir")
-    spark.read.parquet(batchDirs: _*)
-      .filter(col("topic") === topic)
-      .withColumn("__id",
-        get_json_object(col("payload_json"), s"$$.$idField").cast("long"))
-      .groupBy("__id")
-      .agg(expr(
-        "max_by(struct(pos_key, message_type, schema_version, payload_json)," +
-          " pos_key)").as("s"))
-      .select(col("__id").as("row_id"), col("s.pos_key").as("pos_key"),
-        col("s.message_type").as("message_type"),
-        col("s.schema_version").as("schema_version"),
-        col("s.payload_json").as("payload_json"))
-      .filter(col("message_type") =!= "delete")
-  }
+      idField: String = "doc_id"): DataFrame =
+    CdcPipeline.latestState(spark, outDir, col("topic") === topic,
+      Seq(col("topic"),
+        get_json_object(col("payload_json"), s"$$.$idField").cast("long").as("row_id")),
+      Seq("message_type", "schema_version", "payload_json"))
 
   /** Materialized `documents`-table snapshot → the documents-shaped
     * corpus the curation registry operates on (doc_id, text, lang,

@@ -215,7 +215,10 @@ object CdcPipeline {
     * [[graft.Tables.session]], or set `spark.sql.artifact.isolation.enabled`
     * to false when creating it: with isolation on, every run gets a fresh
     * executor classloader and recompiles all of its generated code. The
-    * setting cannot be changed on a session that already exists. */
+    * setting cannot be changed on a session that already exists.
+    *
+    * The sink under `outDir` is the changelog; the current table state is
+    * the t13b query over it, [[readMaterialized]]. */
   def start(
       spark: SparkSession,
       replayDir: String,
@@ -223,12 +226,7 @@ object CdcPipeline {
       checkpointDir: String,
       stateDir: String,
       maxFilesPerTrigger: Int = 1,
-      statsSink: BatchStats => Unit = _ => (),
-      /** When set, the pipeline also maintains a current-table-state
-        * snapshot (the continuous t13b): per batch, the previous snapshot
-        * merged with the batch's changes by max_by(pos_key), written
-        * idempotently to `snap=<batchId>`. */
-      materializeDir: Option[String] = None): StreamingQuery = {
+      statsSink: BatchStats => Unit = _ => ()): StreamingQuery = {
 
     // T37/T5 — metric node evaluated during the batch's first job (no
     // extra pass over the data): event/heartbeat counters, per-table
@@ -306,10 +304,6 @@ object CdcPipeline {
           .toDF("database_name", "base_table", "version", "from_id", "to_id")
         Seq(CdcOps.evolvePayload(env0, intervals))
       }
-
-      override val published: Option[(Long, Seq[DataFrame]) => Unit] =
-        materializeDir.map(dir => (batchId: Long, outs: Seq[DataFrame]) =>
-          materializeBatch(spark, outs.head, batchId, dir, outDir))
     }
 
     run(spark, replaySchema, replay, replayDir, outDir, checkpointDir, stateDir,
@@ -419,16 +413,14 @@ object CdcPipeline {
   // ---- the per-batch commit step both ingress paths share -------------
 
   /** What one source contributes to [[commit]]: its streaming plan over
-    * the source files, the frame cached per batch, its [[controlRows]], the frames to publish
-    * after the DDL barrier, and an optional step after the publish (its
-    * frames are then persisted so the step does not recompute them). */
+    * the source files, the frame cached per batch, its [[controlRows]] and
+    * the frames to publish after the DDL barrier. */
   private trait Ingress {
     def stream(source: DataFrame): DataFrame = source
     def prepare(batch: DataFrame): DataFrame = batch
     def control(cached: DataFrame): Seq[DataFrame]
     def outputs(cached: DataFrame, catalog: SchemaCatalog, keys: Seq[DataKey],
         typing: Seq[(DataKey, Seq[Typing])]): Seq[DataFrame]
-    val published: Option[(Long, Seq[DataFrame]) => Unit] = None
   }
 
   /** One DDL statement of a batch at its binlog position. */
@@ -528,16 +520,7 @@ object CdcPipeline {
       val (ddls, keys, position) = collectControl(src.control(cached))
       val typing = ddlBarrier(catalog, ddls, keys)
       afterDdlHook(batchId)
-      val outs = src.outputs(cached, catalog, keys, typing)
-      src.published match {
-        case None => publish(spark, outDir, batchId, outs)
-        case Some(after) =>
-          outs.foreach(_.persist())
-          try {
-            publish(spark, outDir, batchId, outs)
-            after(batchId, outs)
-          } finally outs.foreach(_.unpersist())
-      }
+      publish(spark, outDir, batchId, src.outputs(cached, catalog, keys, typing))
       position
     } finally cached.unpersist()
   }
@@ -683,32 +666,24 @@ object CdcPipeline {
     }
 
   /** T26 sink, one protocol for both sources: every frame is appended,
-    * one partition per topic sorted by pos_key, and published at once as
-    * `batch=<id>` by [[staged]]. Every committed batch has its
-    * `batch=<id>` directory, empty for a DDL-only batch. */
+    * one partition per topic sorted by pos_key, into a DOT-PREFIXED
+    * staging directory (hidden from Spark/Hadoop file listing), and ONE
+    * rename publishes it as `batch=<id>` — the atomic publish point on a
+    * local FS / HDFS, so a reader listing `batch=` directories never
+    * observes a partly written one. A replayed/crashed attempt may have
+    * left either directory, so both are cleared first. Every committed
+    * batch has its `batch=<id>` directory, empty for a DDL-only batch. */
   private def publish(spark: SparkSession, outDir: String, batchId: Long,
-      frames: Seq[DataFrame]): Unit =
-    staged(spark, outDir, "batch", batchId) { stageDir =>
-      frames.foreach(_.repartition(col("topic"))
-        .sortWithinPartitions("pos_key")
-        .write.mode(SaveMode.Append)
-        .parquet(stageDir))
-    }
-
-  /** Publish `<dir>/<prefix>=<id>` whole: `write` fills a DOT-PREFIXED
-    * staging directory (hidden from Spark/Hadoop file listing), then ONE
-    * rename publishes it — the atomic publish point on a local FS / HDFS,
-    * so a reader listing `<prefix>=` directories never observes a partly
-    * written one. A replayed/crashed attempt may have left either
-    * directory, so both are cleared first. */
-  private def staged(spark: SparkSession, dir: String, prefix: String, id: Long)(
-      write: String => Unit): Unit = {
-    val target = new Path(s"$dir/$prefix=$id")
-    val stage = new Path(s"$dir/.${prefix}_$id.staging")
+      frames: Seq[DataFrame]): Unit = {
+    val target = new Path(s"$outDir/batch=$batchId")
+    val stage = new Path(s"$outDir/.batch_$batchId.staging")
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(stage, true)
     fs.delete(target, true)
-    write(stage.toString)
+    frames.foreach(_.repartition(col("topic"))
+      .sortWithinPartitions("pos_key")
+      .write.mode(SaveMode.Append)
+      .parquet(stage.toString))
     if (!fs.rename(stage, target))
       throw new java.io.IOException(s"failed to publish $stage -> $target")
   }
@@ -763,77 +738,11 @@ object CdcPipeline {
       c.filter(e => coordKeys(e._1)) ++ h.filter(e => hbKeys(e._1))
     }
 
-  /** Continuous t13b: merge the previous snapshot with this batch's
-    * changes, latest image per row identity by pos_key. Delete tombstones
-    * STAY in the snapshot (a replayed/out-of-order change below a
-    * tombstone's position must still lose — Kafka compaction keeps
-    * tombstones for the same reason); readers filter
-    * `message_type <> 'delete'`.
-    *
-    * Crash-safety without a merge-capable format: the new snapshot is
-    * published as `snap=<batchId>` by the sink's staged rename
-    * ([[staged]]: a replay under T31 replaces a crashed attempt's
-    * directories, and [[readMaterialized]] never lists a half-written
-    * snapshot), reading the newest snap strictly below batchId; older
-    * snaps are pruned AFTER the publish so a replay always still finds
-    * its predecessor. At 100 TB the same pattern applies per key-bucket
-    * (only dirty buckets rewrite) or hands off to a merge-capable table
-    * format; the full-state rewrite here matches the control-plane scale
-    * of the reference's state mirror. */
-  private def materializeBatch(spark: SparkSession, env: DataFrame,
-      batchId: Long, matDir: String, outDir: String): Unit = {
-    val ids = snapIds(spark, matDir)
-    // snap ids above batchId can only come from a DIFFERENT incarnation
-    // (fresh checkpoint over an old matDir) — pruning never removes them
-    // and readMaterialized would serve the stale foreign state forever
-    require(ids.forall(_ <= batchId),
-      s"materializeDir $matDir holds snapshots from another run " +
-        s"(ids ${ids.filter(_ > batchId).sorted.mkString(",")} > $batchId); " +
-        "point the pipeline at a fresh directory")
-    val cols = Seq("database_name", "table_name", "payload_id", "pos_key",
-      "message_type", "payload_value", "payload_k",
-      "schema_version", "payload_json").map(col)
-    val changes = env.select(cols: _*)
-    val merged = ids.filter(_ < batchId).maxOption match {
-      case Some(prev) =>
-        spark.read.parquet(s"$matDir/snap=$prev").unionByName(changes)
-      case None =>
-        // no snapshot yet, but earlier batches may already be committed
-        // (materialization enabled mid-stream): their envelope rows live
-        // in the batch=<id> dirs — fold them in so the first snapshot is
-        // complete, not a silent suffix of the changelog
-        val prior = childDirs(spark, outDir, "batch=").map(_._1).filter(_ < batchId)
-        if (prior.isEmpty) changes
-        else spark.read
-          .parquet(prior.map(id => s"$outDir/batch=$id").toIndexedSeq: _*)
-          .select(cols: _*)
-          .unionByName(changes)
-    }
-    val snapshot = merged
-      .groupBy("database_name", "table_name", "payload_id")
-      .agg(expr(
-        "max_by(struct(pos_key, message_type, payload_value, payload_k, " +
-          "schema_version, payload_json), pos_key)").as("s"))
-      .select(col("database_name"), col("table_name"), col("payload_id"),
-        col("s.pos_key").as("pos_key"), col("s.message_type").as("message_type"),
-        col("s.payload_value").as("payload_value"), col("s.payload_k").as("payload_k"),
-        col("s.schema_version").as("schema_version"),
-        col("s.payload_json").as("payload_json"))
-    staged(spark, matDir, "snap", batchId)(snapshot.write.parquet)
-    // prune everything below the direct predecessor (kept for replay)
-    val after = snapIds(spark, matDir)
-    val keep = after.filter(_ < batchId).maxOption
-    after.filter(id => id < batchId && !keep.contains(id)).foreach { id =>
-      val p = new Path(s"$matDir/snap=$id")
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    }
-  }
-
   /** `<prefix><id>` child dirs of `dir` by id, listed through the Hadoop
-    * FS API so a non-local matDir/outDir (HDFS/S3) lists correctly —
-    * java.io.File returns null there, which would silently present an
-    * empty state. A missing dir is a legitimate empty state; any OTHER
-    * failure (permission, transient FS error) propagates loudly. */
+    * FS API so a non-local outDir (HDFS/S3) lists correctly — java.io.File
+    * returns null there, which would silently present an empty state. A
+    * missing dir is a legitimate empty state; any OTHER failure
+    * (permission, transient FS error) propagates loudly. */
   private def childDirs(spark: SparkSession, dir: String, prefix: String): Seq[(Long, Path)] = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -844,16 +753,34 @@ object CdcPipeline {
       .sortBy(_._1)
   }
 
-  private def snapIds(spark: SparkSession, matDir: String): Seq[Long] =
-    childDirs(spark, matDir, "snap=").map(_._1)
-
-  /** Read the current materialized table state (live rows only). */
-  def readMaterialized(spark: SparkSession, matDir: String): DataFrame = {
-    val latest = snapIds(spark, matDir).maxOption.getOrElse(throw new IllegalStateException(
-      s"no materialized snapshot in $matDir yet — has a batch committed with materializeDir set?"))
-    spark.read.parquet(s"$matDir/snap=$latest")
+  /** The t13b latest-state query over the committed changelog (T13: the
+    * reference keeps no materialized table; the current state is a query
+    * over the published changes). Reads the `batch=<id>` directories of
+    * `outDir` listed by [[childDirs]], so a dot-prefixed staging directory
+    * is never read; keeps the `rows` it is asked about; per `identity`,
+    * ONE `max_by(struct(pos_key, image…), pos_key)` aggregate (map-side
+    * combinable: one hash shuffle on identity, never a sort) keeps the
+    * binlog-latest image; a row whose latest change is a delete is gone.
+    * Delete tombstones stay in the changelog, so a change that arrives late
+    * with a lower pos_key than a delete still loses. Returns the identity
+    * columns, then pos_key and `image`. */
+  private[streaming] def latestState(spark: SparkSession, outDir: String, rows: Column,
+      identity: Seq[Column], image: Seq[String]): DataFrame = {
+    val batches = childDirs(spark, outDir, "batch=").map(_._2.toString)
+    require(batches.nonEmpty, s"no committed batch= dirs under $outDir")
+    val latest = spark.read.parquet(batches: _*).filter(rows)
+      .groupBy(identity: _*)
+      .agg(max_by(struct(("pos_key" +: image).map(col): _*), col("pos_key")).as("s"))
+    latest.select(latest.columns.filterNot(_ == "s").map(col) :+ col("s.*"): _*)
       .filter(col("message_type") =!= "delete")
   }
+
+  /** Current table state of a [[start]] sink (live rows only): the latest
+    * image per (database_name, table_name, payload_id) over `outDir`. */
+  def readMaterialized(spark: SparkSession, outDir: String): DataFrame =
+    latestState(spark, outDir, lit(true),
+      Seq("database_name", "table_name", "payload_id").map(col),
+      Seq("message_type", "payload_value", "payload_k", "schema_version", "payload_json"))
 
   /** [[compactWireBatches]] report: merged spans as (lo, hi) id pairs,
     * batch-directory and data-file counts before/after. */

@@ -483,7 +483,8 @@ class PlanSpec extends AnyFunSuite {
   // Registry-wide hint budget. The q-family pin above enforces ZERO
   // non-whitelisted hints on relational queries; this pin extends the
   // policy to EVERY registry entry with an audited per-query budget
-  // (tools.HintAudit measured the counts). A nonzero budget is a hint on
+  // (`offendingHints` counts them; a failure lists the hinted frames'
+  // columns). A nonzero budget is a hint on
   // a frame whose cardinality is bounded by something that does NOT grow
   // with the corpus:
   //   __pid/__off offsets        — per-partition prefix sums: O(#partitions)

@@ -260,7 +260,7 @@ class CdcPipelineSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("cdc-mat").toString
     writeSegments(s"$root/replay", 3)
     val q = CdcPipeline.start(spark, s"$root/replay", s"$root/out",
-      s"$root/ck", s"$root/state", materializeDir = Some(s"$root/mat"))
+      s"$root/ck", s"$root/state")
     q.awaitTermination()
 
     // batch truth: latest image per row identity, deletes dropped — the
@@ -272,41 +272,35 @@ class CdcPipelineSpec extends AnyFunSuite {
       .filter(col("message_type") =!= "delete")
       .select("database_name", "table_name", "payload_id", "message_type",
         "payload_value")
-    val got = CdcPipeline.readMaterialized(spark, s"$root/mat")
+    val got = CdcPipeline.readMaterialized(spark, s"$root/out")
       .select("database_name", "table_name", "payload_id", "message_type",
         "payload_value")
     assert(got.count() == expected.count(),
       s"snapshot rows ${got.count()} != batch ${expected.count()}")
     assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty,
       "materialized snapshot diverges from batch t13b")
-    // incremental maintenance actually happened: only the latest snapshot
-    // and its predecessor survive pruning
-    val snaps = new java.io.File(s"$root/mat").listFiles()
-      .filter(_.getName.startsWith("snap=")).map(_.getName).sorted
-    assert(snaps.length <= 2, s"snapshot pruning failed: ${snaps.mkString(",")}")
   }
 
   test("crash between snapshot writes: replay converges the materialized state") {
-    // crash mid-batch with materialization on (after the batch's DDL, so
-    // both the batch=<id> dir and the snap=<id> dir may or may not exist),
-    // restart, and require the final snapshot to equal the batch truth —
-    // the snap=<id> overwrite + read-strictly-below protocol must make
-    // the replay idempotent
+    // crash mid-batch (after the batch's DDL, before its publish), restart,
+    // and require the latest state read off the changelog to equal the
+    // batch truth — the replayed batch's publish must leave no duplicate
+    // or missing change for the reader to fold
     val root = Files.createTempDirectory("cdc-mat-crash").toString
     writeSegments(s"$root/replay", 3)
     val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
     CdcPipeline.afterDdlHook = { batchId =>
       if (batchId == 1 && crashed.compareAndSet(false, true))
-        throw new RuntimeException("injected crash with materialization on")
+        throw new RuntimeException("injected crash mid-batch")
     }
     try {
       val q1 = CdcPipeline.start(spark, s"$root/replay", s"$root/out",
-        s"$root/ck", s"$root/st", materializeDir = Some(s"$root/mat"))
+        s"$root/ck", s"$root/st")
       intercept[Exception] { q1.awaitTermination() }
     } finally CdcPipeline.afterDdlHook = _ => ()
     assert(crashed.get)
     CdcPipeline.start(spark, s"$root/replay", s"$root/out",
-      s"$root/ck", s"$root/st", materializeDir = Some(s"$root/mat"))
+      s"$root/ck", s"$root/st")
       .awaitTermination()
 
     val env = CdcOps.pipeline(Tables.events(spark, sfDir))
@@ -315,44 +309,45 @@ class CdcPipelineSpec extends AnyFunSuite {
         expr("max_by(payload_value, pos_key)").as("payload_value"))
       .filter(col("message_type") =!= "delete")
       .select("database_name", "table_name", "payload_id", "payload_value")
-    val got = CdcPipeline.readMaterialized(spark, s"$root/mat")
+    val got = CdcPipeline.readMaterialized(spark, s"$root/out")
       .select("database_name", "table_name", "payload_id", "payload_value")
     assert(got.count() == expected.count())
     assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty,
       "post-crash materialized snapshot diverges from batch truth")
   }
 
-  test("materialization enabled mid-stream backfills from committed batch dirs") {
+  test("readMaterialized covers batches committed by an earlier run") {
     val root = Files.createTempDirectory("cdc-mat2").toString
     writeSegments(s"$root/replay", 2)
-    // first run WITHOUT materialization — batches commit to batch=<id> only
     CdcPipeline.start(spark, s"$root/replay", s"$root/out",
       s"$root/ck", s"$root/state").awaitTermination()
-    // new segment arrives; restart WITH materialization: the first
-    // snapshot must fold in the already-committed batches, not just the
-    // new one
+    // new segment arrives; the restarted run commits it: the state must
+    // fold in the first run's batches, not just the new one
     val ev = Tables.events(spark, sfDir)
       .select("event_id", "user_id", "event_type", "value", "props", "ts_us")
     ev.filter(pmod(col("event_id"), lit(7)) === 3).coalesce(1)
       .write.mode("append").parquet(s"$root/replay")
     CdcPipeline.start(spark, s"$root/replay", s"$root/out",
-      s"$root/ck", s"$root/state", materializeDir = Some(s"$root/mat"))
-      .awaitTermination()
+      s"$root/ck", s"$root/state").awaitTermination()
+    assert(CdcPipeline.loadState(s"$root/state").get.lastBatchId == 2L)
 
     val allOut = spark.read.parquet(s"$root/out")
     val expected = allOut.groupBy("database_name", "table_name", "payload_id")
       .agg(expr("max_by(message_type, pos_key)").as("message_type"))
       .filter(col("message_type") =!= "delete")
-    val got = CdcPipeline.readMaterialized(spark, s"$root/mat")
+    val got = CdcPipeline.readMaterialized(spark, s"$root/out")
+      .select("database_name", "table_name", "payload_id", "message_type")
     assert(got.count() == expected.count(),
-      s"mid-stream snapshot ${got.count()} != full-changelog state ${expected.count()}")
+      s"state ${got.count()} != full-changelog state ${expected.count()}")
+    assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty,
+      "state diverges from the full changelog's")
   }
 
   test("mid-stream ALTER changes the payload column set from its position onward (T22b)") {
     // reference schema_event_handler.py:154-175 + end_to_end_test
     // alter-mid-stream: rows BEFORE the ALTER publish under the old schema
     // version, rows AFTER under the new one — the data plane follows the
-    // catalog, per binlog position, through the materialized snapshot.
+    // catalog, per binlog position, through the latest-state reader.
     val root = Files.createTempDirectory("cdc-evolve").toString
     val replayDir = s"$root/replay"
     // hand-ordered stream: data(t0) → ALTER t0 ADD → data(t0). user_id=5
@@ -370,10 +365,10 @@ class CdcPipelineSpec extends AnyFunSuite {
     writeOne(200L, "error", 0.0, 1)
     writeOne(300L, "signup", 2.0, 2)
 
-    CdcPipeline.start(spark, replayDir, s"$root/out", s"$root/ck", s"$root/state",
-      materializeDir = Some(s"$root/mat")).awaitTermination()
+    CdcPipeline.start(spark, replayDir, s"$root/out", s"$root/ck", s"$root/state")
+      .awaitTermination()
 
-    val snap = CdcPipeline.readMaterialized(spark, s"$root/mat")
+    val snap = CdcPipeline.readMaterialized(spark, s"$root/out")
       .select("payload_id", "schema_version", "payload_json")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq.sortBy(_._1)
     assert(snap.map(_._1) == Seq(1000L, 1001L, 1002L, 3000L, 3001L, 3002L))
@@ -391,9 +386,9 @@ class CdcPipelineSpec extends AnyFunSuite {
     // catalog's alter positions from the state snapshot, so a NEW data
     // batch still versions against the pre-restart ALTER
     writeOne(400L, "signup", 3.0, 2)
-    CdcPipeline.start(spark, replayDir, s"$root/out", s"$root/ck", s"$root/state",
-      materializeDir = Some(s"$root/mat")).awaitTermination()
-    val v400 = CdcPipeline.readMaterialized(spark, s"$root/mat")
+    CdcPipeline.start(spark, replayDir, s"$root/out", s"$root/ck", s"$root/state")
+      .awaitTermination()
+    val v400 = CdcPipeline.readMaterialized(spark, s"$root/out")
       .filter(col("payload_id") === 4000L)
       .select("schema_version", "payload_json")
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
@@ -650,14 +645,39 @@ class CdcPipelineSpec extends AnyFunSuite {
     }
     check("replay", root => writeSegments(s"$root/replay", 3), startReplayAt)
     check("wire", root => writeWireFeed(s"$root/wire"), startWireAt)
+  }
 
-    // snapshots publish the same way
-    val matRoot = Files.createTempDirectory("cdc-publish-mat").toString
-    writeSegments(s"$matRoot/replay", 2)
-    CdcPipeline.start(spark, s"$matRoot/replay", s"$matRoot/out", s"$matRoot/ck",
-      s"$matRoot/st", materializeDir = Some(s"$matRoot/mat")).awaitTermination()
-    assert(new java.io.File(s"$matRoot/mat/snap=1").isDirectory)
-    assert(stagingDirs(s"$matRoot/mat").isEmpty, "a clean materializing run leaves no staging dir")
+  test("latest-state readers ignore a staging dir, for both sources") {
+    // a staging dir holding a later delete of every live row: published,
+    // it would empty the state; staged, neither reader may see it
+    def check(name: String, out: String, read: () => org.apache.spark.sql.DataFrame): Unit = {
+      val before = read()
+      val live = before.collect().toSeq
+      assert(live.nonEmpty, s"$name: the committed state must hold live rows")
+      val lastBatch = new java.io.File(out).listFiles().map(_.getName)
+        .filter(_.startsWith("batch=")).map(_.stripPrefix("batch=").toLong).max
+      val next = lastBatch + 1
+      spark.read.parquet(s"$out/batch=$lastBatch")
+        .withColumn("pos_key", concat(col("pos_key"), lit("~")))
+        .withColumn("message_type", lit("delete"))
+        .write.parquet(s"$out/.batch_$next.staging")
+      assert(read().collect().toSeq.sortBy(_.toString) == live.sortBy(_.toString),
+        s"$name: a reader saw the staging dir")
+      // the planted rows are not vacuous: published, they change the state
+      Files.move(java.nio.file.Paths.get(s"$out/.batch_$next.staging"),
+        java.nio.file.Paths.get(s"$out/batch=$next"))
+      assert(read().count() < live.size, s"$name: the planted deletes must change the state")
+    }
+    val replayRoot = Files.createTempDirectory("cdc-read-staging-replay").toString
+    writeOneEvent(replayRoot)
+    startReplayAt(replayRoot).awaitTermination()
+    check("replay", s"$replayRoot/out",
+      () => CdcPipeline.readMaterialized(spark, s"$replayRoot/out"))
+    val wireRoot = Files.createTempDirectory("cdc-read-staging-wire").toString
+    writeWireFeed(s"$wireRoot/wire")
+    startWireAt(wireRoot).awaitTermination()
+    check("wire", s"$wireRoot/out",
+      () => CdcCuration.materializeWire(spark, s"$wireRoot/out", "inventory.customers", "id"))
   }
 
   test("wire sink groups: at most WireTableGroupSize tables per union, each table's projections in one") {
