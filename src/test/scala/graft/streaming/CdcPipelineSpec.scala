@@ -739,6 +739,44 @@ class CdcPipelineSpec extends AnyFunSuite {
     assert(st.lastBatchId == 0L && st.position("log_pos") == "700")
   }
 
+  test("wire mode: every catalog type renders byte-identical to to_json over the cast struct") {
+    val root = Files.createTempDirectory("cdc-wire-types").toString
+    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
+    // one column per Spark type mysqlType yields, and a name JSON escapes
+    val ddl = "CREATE TABLE `alltypes` (id INT PRIMARY KEY, b TINYINT(1), " +
+      "big BIGINT, ubig BIGINT UNSIGNED, dec DECIMAL(9,2), f FLOAT, d DOUBLE, " +
+      "dt DATE, dtm DATETIME, ts TIMESTAMP, tm TIME, s VARCHAR(32), bl BLOB, " +
+      "`we\"ird\\col` VARCHAR(8))"
+    val full = """{"id":"1","b":"1","big":"9007199254740993","ubig":"18446744073709551615",""" +
+      """"dec":"-1234567.8","f":"1.5","d":"1.0E20","dt":"2024-02-29",""" +
+      """"dtm":"2024-02-29 12:34:56","ts":"2024-02-29T12:34:56.789Z",""" +
+      """"tm":"45296000000","s":"q\"u\\o\ttab","bl":"AQID","we\"ird\\col":"x"}"""
+    // `dec` absent (a null field), `d` a JSON null (a value that casts to null)
+    val sparse = """{"id":"2","b":"0","big":"-7","ubig":"0","f":"-0.25","d":null,""" +
+      """"dt":"1970-01-01","ts":"1970-01-01T00:00:00Z","tm":"0","s":""}"""
+    writeWireSeg(s"$root/wire", Seq(
+      schemaEvent(100, esc(ddl), "CREATE", "alltypes"),
+      dataEvent("alltypes", 200, "c", full),
+      dataEvent("alltypes", 300, "c", sparse),
+      dataEvent("alltypes", 400, "d", "null", before = sparse)))
+    startWireAt(root).awaitTermination()
+    val rows = spark.read.parquet(s"$root/out/batch=0").orderBy("pos_key")
+      .select("topic", "schema_id", "schema_version", "payload_json")
+      .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getString(3))).toSeq
+    // the payloads `to_json(struct(image[c].cast(type) AS c, ...))` rendered
+    // before the wire projection became table-independent
+    val fullJson = """{"id":1,"b":true,"big":9007199254740993,"ubig":18446744073709551615,""" +
+      """"dec":-1234567.80,"f":1.5,"d":1.0E20,"dt":"2024-02-29","dtm":"2024-02-29 12:34:56",""" +
+      """"ts":"2024-02-29T12:34:56.789Z","tm":45296000000,"s":"q\"u\\o\ttab","bl":"QVFJRA==",""" +
+      """"we\"ird\\col":"x"}"""
+    val sparseJson = """{"id":2,"b":false,"big":-7,"ubig":0,"f":-0.25,"dt":"1970-01-01",""" +
+      """"ts":"1970-01-01T00:00:00.000Z","tm":0,"s":""}"""
+    assert(rows == Seq(
+      ("inventory.alltypes", 1, 1L, fullJson),
+      ("inventory.alltypes", 1, 1L, sparseJson),
+      ("inventory.alltypes", 1, 1L, sparseJson)), rows.mkString("\n"))
+  }
+
   test("a restart compiles no generated code for a segment of the shape it ran before, for both sources") {
     import org.apache.spark.metrics.source.CodegenMetrics
     def compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
