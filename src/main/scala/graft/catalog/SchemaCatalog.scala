@@ -100,15 +100,18 @@ class SchemaCatalog(piiTables: Set[String] = Set.empty) {
           // duplicate column; the reference never replays DDL past its
           // checkpoint barrier, schema_event_handler.py:66-74)
           return entries.get(id)
-        if (atEventId >= 0)
-          alterHistory :+= (id -> atEventId)
         val cur = entries.get(id).map(_.struct).getOrElse(new StructType())
         val curPkeys = entries.get(id).map(_.pkeys).getOrElse(Nil)
+        // recorded once the statement has parsed: one that throws leaves
+        // the catalog as it was
+        def recordAlter(): Unit = if (atEventId >= 0) alterHistory :+= (id -> atEventId)
         if (rename) {
           val (newStruct, newName) = MysqlDdlToStruct.applyAlterRename(sql, cur)
+          recordAlter()
           Some(move(id, id.copy(table = newName), newStruct, curPkeys))
         } else {
           val (newStruct, newPkeys) = MysqlDdlToStruct.applyAlterWithKeys(sql, cur, curPkeys)
+          recordAlter()
           entries.get(id).foreach { old =>
             compatReports :+= (id ->
               SchemaCompat.check(old, TableSchema(0, newStruct, old.containsPii, newPkeys)))
@@ -239,7 +242,8 @@ object MysqlDdlToStruct {
 
   /** MySQL column type → Spark DataType. TIME maps to LongType
     * (µs-since-midnight) and DATETIME to StringType (ISO-8601) because
-    * those are the reference's *output* representations (T11). */
+    * those are the reference's *output* representations (T11); a DECIMAL
+    * wider than Spark's 38 digits maps to StringType. */
   def mysqlType(raw: String): DataType = {
     val t = raw.toUpperCase
     val base = t.takeWhile(c => c.isLetter)
@@ -252,7 +256,9 @@ object MysqlDdlToStruct {
       case "BIGINT" => if (t.contains("UNSIGNED")) DecimalType(20, 0) else LongType
       case "DECIMAL" | "DEC" | "FIXED" | "NUMERIC" =>
         val p = params.headOption.getOrElse(10); val s = params.lift(1).getOrElse(0)
-        DecimalType(p, s)
+        // MySQL allows 65 digits, Spark 38: a wider column keeps its exact
+        // decimal text, as DATETIME keeps its ISO text
+        if (p > DecimalType.MAX_PRECISION) StringType else DecimalType(p, s)
       case "FLOAT" => FloatType
       case "DOUBLE" | "REAL" => DoubleType
       case "DATE" => DateType

@@ -21,8 +21,8 @@ import org.apache.spark.sql.types._
   * images are parsed as MAP<STRING,STRING> — per-table schemas vary at
   * runtime, which is exactly the dynamic-payload model the catalog's
   * evolved StructTypes then type (on the wire path,
-  * `CdcPipeline.ddlBarrier` + `typedProjections`: each row under the
-  * catalog at its own position).
+  * `CdcPipeline.ddlBarrier` + `typedWire`: each row under the catalog at
+  * its own position).
   *
   * Mapping (reference semantics the rest of the engine already encodes):
   * op c/u/d → create/update/delete (the reference's
@@ -247,7 +247,7 @@ object DebeziumAdapter {
     * the reference's schema_event_handler owns (py:49-132): statements
     * apply in binlog order, ALTERs record their position so the payload
     * versions (T22b: replay's ALTER intervals; on the wire path
-    * `CdcPipeline.ddlBarrier` + `typedProjections`) follow the REAL
+    * `CdcPipeline.ddlBarrier` + `typedWire`) follow the REAL
     * connector's DDL from that position onward. The collect is
     * control-plane-tiny by construction (one row per DDL statement, the
     * same bound the reference's single-threaded DDL path implies).

@@ -21,10 +21,11 @@ import java.util.concurrent.atomic.AtomicReference
   *    tables, the position maxima (T19 routing, T5/T27 position)
   * 2. DDL barrier: SchemaCatalog.applyDdl in position order (T20-T24; the
   *    reference's flush before a schema change), then afterDdlHook
-  * 3. typed frames (replay: T3-T18 chain → envelope, payload versions by
-  *    the catalog's ALTER intervals; wire: one projection per table and
-  *    catalog answer), each one partition per topic sorted by pos_key
-  *    (SURVEY §7.4 risk 3), appended into `.batch_<id>.staging` and
+  * 3. ONE typed frame (replay: T3-T18 chain → envelope, payload versions
+  *    by the catalog's ALTER intervals; wire: one projection whose plan
+  *    does not depend on the batch's tables, each row looking its catalog
+  *    answer up by table and position), one partition per topic sorted by
+  *    pos_key (SURVEY §7.4 risk 3), written into `.batch_<id>.staging` and
   *    published by ONE rename to `batch=<id>` (T26)
   * 4. state mirror: lastBatchId + catalog snapshot + position, written
   *    atomically (T25/T27)
@@ -270,7 +271,7 @@ object CdcPipeline {
       }
 
       def outputs(cached: DataFrame, catalog: SchemaCatalog, keys: Seq[DataKey],
-          typing: Seq[(DataKey, Seq[Typing])]): Seq[DataFrame] = {
+          typing: Seq[(DataKey, Seq[Typing])]): DataFrame = {
         // register unseen tables deterministically (keys arrive sorted),
         // then broadcast the registry
         keys.foreach { k =>
@@ -302,7 +303,7 @@ object CdcPipeline {
               (db, tbl, idx + 2L, from, at.lift(idx + 1)) }
           }
           .toDF("database_name", "base_table", "version", "from_id", "to_id")
-        Seq(CdcOps.evolvePayload(env0, intervals))
+        CdcOps.evolvePayload(env0, intervals)
       }
     }
 
@@ -339,14 +340,15 @@ object CdcPipeline {
     * version (T22b parity with replay's intervals), and a row before an
     * in-batch CREATE or after a DROP is unregistered. Debezium delete
     * TOMBSTONES (null Kafka value) are dropped by contract; unparseable
-    * records are quarantined under `topic=__unparsed`; rows for tables the
-    * schema-change topic has not created, under `topic=__unregistered`
-    * (the reference fetches SHOW CREATE on a miss — that needs a live
-    * MySQL, so the wire path records instead of guessing).
+    * records on either kind of topic are quarantined under
+    * `topic=__unparsed`; rows for tables the schema-change topic has not
+    * created, under `topic=__unregistered` (the reference fetches SHOW
+    * CREATE on a miss — that needs a live MySQL, so the wire path records
+    * instead of guessing).
     *
-    * Scale: the projections are control-plane-bounded (#tables × #answers
-    * each), each one narrow codegen'd pass over the cached parse; the sink
-    * repartition is the only shuffle.
+    * Scale: every row of a batch is typed by ONE projection ([[typedWire]])
+    * whose plan and generated code are the same for any set of tables and
+    * catalog answers; the sink repartition is the only shuffle.
     *
     * As for [[start]]: build `spark` with [[graft.Tables.session]] or with
     * `spark.sql.artifact.isolation.enabled=false`, or every run recompiles
@@ -361,28 +363,27 @@ object CdcPipeline {
       stateDir: String,
       maxFilesPerTrigger: Int = 1): StreamingQuery = {
     // the cached batch holds each frame's parse: `sc` on the
-    // schema-change topic, `dv` on the data topics. A data row needs
-    // identity AND coordinates to be typed — a null log_file/log_pos would
-    // give a null __pos no position range holds.
+    // schema-change topic, `dv` on the data topics. A statement needs its
+    // coordinates to be placed on the position axis; a frame without
+    // them, and every other frame, is a data frame to [[typedWire]]
     val schemaTopic = col("topic") === cluster
+    val isDdl = col("schema_topic") && col("sc.payload.ddl").isNotNull &&
+      col("sc.payload.source.file").isNotNull && col("sc.payload.source.pos").isNotNull
     def changes(cached: DataFrame): DataFrame = DebeziumAdapter.schemaChangeRows(
-      cached.filter(col("schema_topic")).select(col("sc").as("v")))
+      cached.filter(isDdl).select(col("sc").as("v")))
     def parsed(cached: DataFrame): DataFrame = DebeziumAdapter.changeRows(
-      cached.filter(!col("schema_topic")).select(col("dv").as("v")))
-    val wellFormed = col("database_name").isNotNull && col("table_name").isNotNull &&
-      col("log_file").isNotNull && col("log_pos").isNotNull
-    def data(cached: DataFrame): DataFrame = parsed(cached).filter(wellFormed)
-      .withColumn("__pos", DebeziumAdapter.packedEventId(col("log_file"), col("log_pos")))
+      cached.filter(!isDdl).select(col("dv").as("v")))
     val coord = struct(col("log_file"), col("log_pos"))
 
     val wire = new Ingress {
-      // One scan, one JSON parse per frame. A null Kafka value on a data
-      // topic is a Debezium delete TOMBSTONE (compaction hint, no image,
-      // no coordinates) — dropped by contract, the delete event itself
-      // already carried the row.
+      // One scan, one JSON parse per frame. A null Kafka value is a
+      // Debezium delete TOMBSTONE on a data topic (compaction hint, no
+      // image, no coordinates) — dropped by contract, the delete event
+      // itself already carried the row — and carries no statement on the
+      // schema-change topic.
       override def prepare(batch: DataFrame): DataFrame = {
         val json = col("value").cast("string")
-        batch.filter(schemaTopic || col("value").isNotNull).select(
+        batch.filter(col("value").isNotNull).select(
           schemaTopic.as("schema_topic"),
           when(schemaTopic, from_json(json, DebeziumAdapter.schemaChangeSchema)).as("sc"),
           when(!schemaTopic, from_json(json, DebeziumAdapter.valueSchema)).as("dv"))
@@ -395,17 +396,13 @@ object CdcPipeline {
         controlRows(changes(cached), lit("ddl"),
           "cluster" -> col("cluster_name"), "db" -> col("database_name"),
           "name" -> col("ddl"), "at" -> col("event_id"), "p" -> coord),
-        controlRows(data(cached), lit("key"),
+        controlRows(parsed(cached).filter(wireWellFormed), lit("key"),
           "cluster" -> lit(cluster), "db" -> col("database_name"),
-          "name" -> col("table_name"), "pos" -> col("__pos"), "p" -> coord))
+          "name" -> col("table_name"), "pos" -> wirePos, "p" -> coord))
 
-      // records whose payload does not parse (null db/table after
-      // from_json) write last and always, so even a DDL-only batch
-      // publishes its (empty) batch directory
       def outputs(cached: DataFrame, catalog: SchemaCatalog, keys: Seq[DataKey],
-          typing: Seq[(DataKey, Seq[Typing])]): Seq[DataFrame] =
-        groupedUnions(typedProjections(data(cached), typing)) :+
-          quarantined(parsed(cached).filter(!wellFormed), "__unparsed")
+          typing: Seq[(DataKey, Seq[Typing])]): DataFrame =
+        typedWire(parsed(cached), typing)
     }
     run(spark, wireSchema, wire, wireDir, outDir, checkpointDir, stateDir, maxFilesPerTrigger)
   }
@@ -414,13 +411,13 @@ object CdcPipeline {
 
   /** What one source contributes to [[commit]]: its streaming plan over
     * the source files, the frame cached per batch, its [[controlRows]] and
-    * the frames to publish after the DDL barrier. */
+    * the frame to publish after the DDL barrier. */
   private trait Ingress {
     def stream(source: DataFrame): DataFrame = source
     def prepare(batch: DataFrame): DataFrame = batch
     def control(cached: DataFrame): Seq[DataFrame]
     def outputs(cached: DataFrame, catalog: SchemaCatalog, keys: Seq[DataKey],
-        typing: Seq[(DataKey, Seq[Typing])]): Seq[DataFrame]
+        typing: Seq[(DataKey, Seq[Typing])]): DataFrame
   }
 
   /** One DDL statement of a batch at its binlog position. */
@@ -509,7 +506,7 @@ object CdcPipeline {
     query
   }
 
-  /** One micro-batch: control collect, DDL barrier, typed frames, staged
+  /** One micro-batch: control collect, DDL barrier, typed frame, staged
     * publish (see the object scaladoc). Returns the batch's position
     * mirror (a [[graft.cdc.LogPosition]] dict) — what the reference
     * persists as GlobalEventState.position. */
@@ -619,6 +616,13 @@ object CdcPipeline {
     }
   }
 
+  /** A parsed wire row the commit step can type: identity AND coordinates
+    * (a null log_file/log_pos gives a null [[wirePos]]). */
+  private val wireWellFormed = col("database_name").isNotNull && col("table_name").isNotNull &&
+    col("log_file").isNotNull && col("log_pos").isNotNull
+
+  private val wirePos = DebeziumAdapter.packedEventId(col("log_file"), col("log_pos"))
+
   /** Debezium row image: a delete carries its image in `before`. */
   private val wireImage = when(col("message_type") === "delete", col("before"))
     .otherwise(col("after"))
@@ -629,89 +633,118 @@ object CdcPipeline {
       lpad(col("log_pos").cast("string"), 10, "0"),
       lpad(col("row_idx").cast("string"), 4, "0")).as("pos_key"))
 
-  /** The wire sink's row: envelope columns, then [[wireMeta]]. */
-  private def wireRows(rows: DataFrame, topic: String, schemaId: Int, pii: Boolean,
-      version: Long, payload: Column): DataFrame =
-    rows.select(Seq(lit(topic).as("topic"), lit(schemaId).as("schema_id"),
-      lit(pii).as("contains_pii"), lit(version).as("schema_version"),
-      payload.as("payload_json")) ++ wireMeta: _*)
+  /** [[typedWire]]'s lookup: a registered catalog answer of a table over
+    * the position range [lo, hi) (None: open), with its ordered fields.
+    * `key` is the field's name as the JSON generator writes it, with the
+    * colon. */
+  private[streaming] final case class WireTable(db: String, table: String)
+  private[streaming] final case class WireField(key: String, name: String, tpe: String)
+  private[streaming] final case class WireAnswer(lo: Option[Long], hi: Option[Long],
+      topic: String, schemaId: Int, pii: Boolean, version: Long, fields: Seq[WireField])
 
-  private def quarantined(rows: DataFrame, topic: String): DataFrame =
-    wireRows(rows, topic, -1, pii = false, 0L, to_json(wireImage))
+  private val jsonFactory = new com.fasterxml.jackson.core.JsonFactory()
 
-  /** One projection per (table, catalog answer) of [[ddlBarrier]], keyed
-    * by table for [[groupedUnions]]: the row image cast to the answer's
-    * StructType (the reference's per-table handler shape), or
-    * `__unregistered` where the table is absent. [[graft.tools.WireRehearsal]]
-    * measures its plan-build cost at hundreds of tables. */
-  private[graft] def typedProjections(data: DataFrame,
-      typing: Seq[(DataKey, Seq[Typing])]): Seq[((String, String), DataFrame)] =
-    typing.flatMap { case (k, answers) =>
-      val rows = data.filter(col("database_name") === k.db &&
-        col("table_name") === k.table)
-      answers.map { t =>
-        val slice = if (answers.size == 1) rows else rows.filter(t.ranges.map {
-          case (lo, hi) =>
-            (if (lo == Long.MinValue) lit(true) else col("__pos") >= lo) &&
-              (if (hi == Long.MaxValue) lit(true) else col("__pos") < hi)
-        }.reduce(_ || _))
-        (k.db, k.table) -> (t.answer match {
-          case Some((ts, version)) =>
-            wireRows(slice, s"${k.db}.${k.table}", ts.schemaId, ts.containsPii, version,
-              to_json(struct(ts.struct.fields.toSeq.map(f =>
-                wireImage.getItem(f.name).cast(f.dataType).as(f.name)): _*)))
-          case None => quarantined(slice, "__unregistered")
-        })
+  /** `"name":` as `to_json` writes a field name: Spark's JSON generator is
+    * Jackson's default one. */
+  private def jsonKey(name: String): String = {
+    val w = new java.io.StringWriter
+    val g = jsonFactory.createGenerator(w)
+    g.writeString(name)
+    g.close()
+    w.toString + ":"
+  }
+
+  /** A string image value as catalog type `t`. Debezium sends a SET as its
+    * comma-joined members, which no cast reads. */
+  private def asType(v: Column, t: DataType): Column = t match {
+    case ArrayType(StringType, _) => when(v === "", array().cast(t)).otherwise(split(v, ","))
+    case _ => v.cast(t)
+  }
+
+  /** The wire sink's rows in ONE projection over the parsed frames, the
+    * reference's per-table handler folded into a lookup: the DDL barrier's
+    * answers become one literal map from (db, table) to the answers'
+    * position ranges, and each row takes the answer whose range holds its
+    * position. Complex literals are reference objects in generated code,
+    * and the type CASE runs inside interpreted lambdas, so the plan and
+    * its generated code are the same for any tables, answers and types.
+    * `payload_json` renders each field as `to_json(array(cast(v AS T)))`
+    * with its brackets stripped — the generator `to_json(struct(…))` uses
+    * — and drops null fields as it does. A row without identity or
+    * coordinates goes to `__unparsed`, a row of a table without a catalog
+    * answer at its position to `__unregistered`, both with the raw image. */
+  private[graft] def typedWire(rows: DataFrame, typing: Seq[(DataKey, Seq[Typing])]): DataFrame = {
+    val answers = typing.map { case (k, ts) =>
+      WireTable(k.db, k.table) -> ts.flatMap { t =>
+        t.answer.toSeq.flatMap { case (schema, version) =>
+          val fields = schema.struct.fields.toSeq.map(f =>
+            WireField(jsonKey(f.name), f.name, f.dataType.catalogString))
+          // a table's only answer holds over all of its rows
+          val ranges = if (ts.size == 1) Seq((Long.MinValue, Long.MaxValue)) else t.ranges
+          ranges.map { case (lo, hi) =>
+            WireAnswer(Some(lo).filter(_ != Long.MinValue), Some(hi).filter(_ != Long.MaxValue),
+              s"${k.db}.${k.table}", schema.schemaId, schema.containsPii, version, fields)
+          }
+        }
+      }
+    }.toMap
+    // sorted, so one set of types gives one CASE
+    val types = typing.flatMap(_._2).flatMap(_.answer)
+      .flatMap(_._1.struct.fields.map(_.dataType))
+      .groupBy(_.catalogString).toSeq.sortBy(_._1).map(_._2.head)
+
+    val pos = col("__pos")
+    val inRange = (a: Column) =>
+      (a("lo").isNull || pos >= a("lo")) && (a("hi").isNull || pos < a("hi"))
+    val lookup = typedLit(answers)
+      .getItem(struct(col("database_name").as("db"), col("table_name").as("table")))
+    def rendered(f: Column): Column = {
+      val v = col("__image").getItem(f("name"))
+      types.map(t => (f("tpe") === t.catalogString, to_json(array(asType(v, t))))) match {
+        case Seq() => lit(null).cast(StringType)
+        case (c, r) +: rest => rest.foldLeft(when(c, r)) { case (acc, (c, r)) => acc.when(c, r) }
       }
     }
+    val parts = transform(col("__a.fields"), f => struct(f("key").as("k"), rendered(f).as("j")))
+    val payload = concat(lit("{"), array_join(transform(parts, p => when(p("j") =!= "[null]",
+      concat(p("k"), p("j").substr(lit(2), length(p("j")) - 2)))), ","), lit("}"))
 
-  /** T26 sink, one protocol for both sources: every frame is appended,
-    * one partition per topic sorted by pos_key, into a DOT-PREFIXED
-    * staging directory (hidden from Spark/Hadoop file listing), and ONE
-    * rename publishes it as `batch=<id>` — the atomic publish point on a
-    * local FS / HDFS, so a reader listing `batch=` directories never
-    * observes a partly written one. A replayed/crashed attempt may have
-    * left either directory, so both are cleared first. Every committed
-    * batch has its `batch=<id>` directory, empty for a DDL-only batch. */
+    rows.select(col("*"), wirePos.as("__pos"), wireImage.as("__image"))
+      .select(col("*"), when(wireWellFormed, get(filter(lookup, inRange), lit(0))).as("__a"))
+      .select(Seq(
+        coalesce(col("__a.topic"),
+          when(wireWellFormed, lit("__unregistered")).otherwise(lit("__unparsed"))).as("topic"),
+        coalesce(col("__a.schemaId"), lit(-1)).as("schema_id"),
+        coalesce(col("__a.pii"), lit(false)).as("contains_pii"),
+        coalesce(col("__a.version"), lit(0L)).as("schema_version"),
+        when(col("__a").isNull, to_json(col("__image"))).otherwise(payload).as("payload_json")
+      ) ++ wireMeta: _*)
+  }
+
+  /** T26 sink, one protocol for both sources: the batch's frame is
+    * written, one partition per topic sorted by pos_key, into a
+    * DOT-PREFIXED staging directory (hidden from Spark/Hadoop file
+    * listing), and ONE rename publishes it as `batch=<id>` — the atomic
+    * publish point on a local FS / HDFS, so a reader listing `batch=`
+    * directories never observes a partly written one. A replayed/crashed
+    * attempt may have left either directory, so both are cleared first.
+    * Every committed batch has its `batch=<id>` directory, empty for a
+    * DDL-only batch. */
   private def publish(spark: SparkSession, outDir: String, batchId: Long,
-      frames: Seq[DataFrame]): Unit = {
+      frame: DataFrame): Unit = {
     val target = new Path(s"$outDir/batch=$batchId")
     val stage = new Path(s"$outDir/.batch_$batchId.staging")
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(stage, true)
     fs.delete(target, true)
-    frames.foreach(_.repartition(col("topic"))
-      .sortWithinPartitions("pos_key")
-      .write.mode(SaveMode.Append)
-      .parquet(stage.toString))
+    sinkOrder(frame).write.parquet(stage.toString)
     if (!fs.rename(stage, target))
       throw new java.io.IOException(s"failed to publish $stage -> $target")
   }
 
-  /** Tables per sink write-group in [[startWire]]: Catalyst's plan-build
-    * cost per union branch grows as it re-walks one ever-wider plan.
-    * [[graft.tools.WireRehearsal]], three runs each on a 4-core machine:
-    * one all-tables union took 45.8-49.5 s to plan a 400-table batch, its
-    * per-table cost rising 1.86-2.18× per table-count doubling; 25-table
-    * groups took 6.2-6.8 s, flat at 0.95-1.06×. Planning and writing per
-    * group keeps every union narrow as deployments widen. */
-  private[graft] val WireTableGroupSize = 25
-
-  /** Shard table-keyed projections into unions of ≤ [[WireTableGroupSize]]
-    * tables each (a table's projections — one per catalog answer — always
-    * land in the same group, so every topic is written exactly once and
-    * its per-file pos_key ordering holds). Groups are independent by
-    * construction: the DDL barrier already fixed each projection's typing,
-    * so group write order carries no semantics. */
-  private[graft] def groupedUnions(
-      slices: Seq[((String, String), DataFrame)]): Seq[DataFrame] = {
-    val tables = slices.map(_._1).distinct.sorted
-    val groupOf = tables.zipWithIndex
-      .map { case (t, i) => t -> i / WireTableGroupSize }.toMap
-    slices.groupBy { case (t, _) => groupOf(t) }
-      .toSeq.sortBy(_._1)
-      .map { case (_, members) => members.map(_._2).reduce(_ unionByName _) }
-  }
+  /** The sink's layout: one partition per topic, sorted by pos_key. */
+  private[graft] def sinkOrder(frame: DataFrame): DataFrame =
+    frame.repartition(col("topic")).sortWithinPartitions("pos_key")
 
   /** Test injection point: runs after the DDL branch of a batch has been
     * applied to the catalog but BEFORE the data write and state save —
@@ -789,8 +822,8 @@ object CdcPipeline {
 
   /** Wire-sink maintenance — the `batch=<id>` small-files/small-dirs leg
     * of the cell layout's `compactCellLayout` (r10): [[startWire]]
-    * publishes one directory per micro-batch, each holding
-    * #groups × #topic-partitions files — at a 1-minute trigger that is
+    * publishes one directory per micro-batch, each holding one file per
+    * written topic partition — at a 1-minute trigger that is
     * ~1,440 directories/day and growing forever. This call merges spans
     * of OLD batch directories into one single-file directory each,
     * preserving the sink's contracts:

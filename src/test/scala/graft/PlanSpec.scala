@@ -550,6 +550,45 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("the typed wire batch executes the same plan at 25 and at 400 tables") {
+    import graft.catalog.SchemaCatalog
+    import graft.streaming.CdcPipeline
+    import spark.implicits._
+    // each table: created before the batch, ALTERed inside it between its
+    // two rows, so every table has two catalog answers
+    val base = 1L << 40 // binlog.000001 on the packed position axis
+    def wirePlan(nTables: Int): (Seq[String], Map[(String, Long), Long]) = {
+      val tables = (0 until nTables).map(i => f"t$i%03d")
+      val catalog = new SchemaCatalog()
+      tables.foreach(t => catalog.applyDdl("c", "db",
+        s"CREATE TABLE `$t` (id INT PRIMARY KEY, name VARCHAR(16), amount DECIMAL(9,2))"))
+      val ddls = tables.zipWithIndex.map { case (t, i) =>
+        CdcPipeline.Ddl("c", "db", s"ALTER TABLE `$t` ADD note VARCHAR(8)", base + 1000 + i) }
+      val keys = tables.zipWithIndex.map { case (t, i) =>
+        CdcPipeline.DataKey("c", "db", t, Some((base + i, base + 4000 + i))) }
+      val typing = CdcPipeline.ddlBarrier(catalog, ddls, keys)
+      val frames = tables.zipWithIndex.flatMap { case (t, i) => Seq(i, 4000 + i).map { pos =>
+        s"""{"payload":{"before":null,"after":{"id":"$i","name":"n","amount":"1.50","note":"x"},""" +
+          s""""source":{"name":"c","db":"db","table":"$t","file":"binlog.000001","pos":$pos,"row":0},""" +
+          s""""op":"c","ts_ms":1700000000000}}"""
+      } }.toDF("json").select($"json".cast("binary").as("value"))
+      val df = CdcPipeline.sinkOrder(
+        CdcPipeline.typedWire(graft.cdc.DebeziumAdapter.fromDebezium(frames), typing))
+      val typed = df.groupBy("topic", "schema_version").count().collect()
+        .map(r => (if (r.getString(0).startsWith("db.")) "typed" else r.getString(0),
+          r.getLong(1)) -> r.getLong(2))
+        .groupMapReduce(_._1)(_._2)(_ + _)
+      df.collect() // force AQE to finalize
+      (nodes(df.queryExecution.executedPlan).map(_.nodeName), typed)
+    }
+    val (small, smallRows) = wirePlan(25)
+    val (wide, wideRows) = wirePlan(400)
+    assert(smallRows == Map(("typed", 1L) -> 25L, ("typed", 2L) -> 25L), smallRows)
+    assert(wideRows == Map(("typed", 1L) -> 400L, ("typed", 2L) -> 400L), wideRows)
+    assert(small.size == wide.size,
+      s"25 tables: ${small.mkString(", ")}\n400 tables: ${wide.mkString(", ")}")
+  }
+
   test("NO production API carries a global sort — gate sorts live in the registry") {
     // The r8 rule, extended to the WHOLE data-pipeline API surface in r14:
     // every DataQueries entry is built from an UNORDERED production API

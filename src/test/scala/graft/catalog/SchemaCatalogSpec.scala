@@ -258,6 +258,27 @@ class SchemaCatalogSpec extends AnyFunSuite {
     assert(c2.all(id).pkeys == Nil)
   }
 
+  test("a DECIMAL wider than Spark's 38 digits keeps its exact text, in CREATE and in ALTER") {
+    val c = cat
+    val ts1 = c.applyDdl("cl", "db",
+      "CREATE TABLE `wide` (id INT PRIMARY KEY, amount DECIMAL(65,30))").get
+    assert(ts1.struct("amount").dataType == StringType)
+    val ts2 = c.applyDdl("cl", "db", "ALTER TABLE wide ADD y DECIMAL(50,2)", atEventId = 10L).get
+    assert(ts2.struct.fields.map(f => f.name -> f.dataType).toSeq ==
+      Seq("id" -> IntegerType, "amount" -> StringType, "y" -> StringType))
+    assert(c.alterEvents == Seq(TableId("cl", "db", "wide") -> 10L))
+    assert(MysqlDdlToStruct.mysqlType("DECIMAL(38,10)") == DecimalType(38, 10))
+  }
+
+  test("an ALTER whose parse throws leaves the catalog and its ALTER positions as they were") {
+    val c = cat
+    c.applyDdl("cl", "db", "CREATE TABLE t (id INT PRIMARY KEY)")
+    val before = c.snapshotJson
+    intercept[Exception](c.applyDdl("cl", "db", "ALTER TABLE t RENAME TO", atEventId = 5L))
+    assert(c.alterEvents.isEmpty)
+    assert(c.snapshotJson == before)
+  }
+
   test("BEGIN/COMMIT and unsupported statements are no-ops") {
     val c = cat
     assert(c.applyDdl("cl", "db", "BEGIN").isEmpty)

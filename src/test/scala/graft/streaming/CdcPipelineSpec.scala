@@ -680,30 +680,6 @@ class CdcPipelineSpec extends AnyFunSuite {
       () => CdcCuration.materializeWire(spark, s"$wireRoot/out", "inventory.customers", "id"))
   }
 
-  test("wire sink groups: at most WireTableGroupSize tables per union, each table's projections in one") {
-    import spark.implicits._
-    // 60 tables span three groups; every seventh has two catalog answers
-    // (two projections), and the projections arrive shuffled, so a
-    // table's two projections are never adjacent
-    val slices = new scala.util.Random(7).shuffle((0 until 60).flatMap { i =>
-      val table = f"t$i%02d"
-      (0 until (if (i % 7 == 0) 2 else 1)).map { answer =>
-        ("db0", table) -> Seq.tabulate(3)(r => (s"db0.$table", answer, r)).toDF("topic", "answer", "r")
-      }
-    })
-    val groups = CdcPipeline.groupedUnions(slices)
-    val rows = groups.map(_.as[(String, Int, Int)].collect().toSeq)
-    val topics = rows.map(_.map(_._1).toSet)
-    assert(groups.size == 3, s"60 tables in ${groups.size} groups")
-    assert(topics.forall(_.size <= CdcPipeline.WireTableGroupSize),
-      s"group sizes ${topics.map(_.size)}")
-    val homes = topics.flatten.groupBy(identity).view.mapValues(_.size).toMap
-    assert(homes.size == 60 && homes.values.forall(_ == 1),
-      s"tables outside exactly one group: ${homes.filter(_._2 != 1)}")
-    val input = slices.flatMap(_._2.as[(String, Int, Int)].collect())
-    assert(rows.flatten.sorted == input.sorted)
-  }
-
   test("wire mode: mid-batch CREATE, RENAME TABLE and DROP TABLE type each row at its position") {
     val root = Files.createTempDirectory("cdc-wire-ddl").toString
     // one batch: rows before and after each statement
@@ -763,8 +739,8 @@ class CdcPipelineSpec extends AnyFunSuite {
     val rows = spark.read.parquet(s"$root/out/batch=0").orderBy("pos_key")
       .select("topic", "schema_id", "schema_version", "payload_json")
       .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getString(3))).toSeq
-    // the payloads `to_json(struct(image[c].cast(type) AS c, ...))` rendered
-    // before the wire projection became table-independent
+    // what `to_json(struct(image[c].cast(type) AS c, ...))` renders for
+    // these images
     val fullJson = """{"id":1,"b":true,"big":9007199254740993,"ubig":18446744073709551615,""" +
       """"dec":-1234567.80,"f":1.5,"d":1.0E20,"dt":"2024-02-29","dtm":"2024-02-29 12:34:56",""" +
       """"ts":"2024-02-29T12:34:56.789Z","tm":45296000000,"s":"q\"u\\o\ttab","bl":"QVFJRA==",""" +
@@ -777,44 +753,115 @@ class CdcPipelineSpec extends AnyFunSuite {
       ("inventory.alltypes", 1, 1L, sparseJson)), rows.mkString("\n"))
   }
 
+  test("wire mode: a SET column renders its members as a JSON array, across a restart") {
+    val root = Files.createTempDirectory("cdc-wire-set").toString
+    writeWireSeg(s"$root/wire", Seq(
+      schemaEvent(100, "CREATE TABLE `tagged` (id INT PRIMARY KEY, tags SET('a','b','c'))",
+        "CREATE", "tagged"),
+      dataEvent("tagged", 200, "c", """{"id":"1","tags":"a,c"}""")))
+    startWireAt(root).awaitTermination()
+    writeWireSeg(s"$root/wire", Seq(
+      dataEvent("tagged", 300, "c", """{"id":"2","tags":""}"""),
+      dataEvent("tagged", 400, "u", """{"id":"1","tags":"b"}""", """{"id":"1","tags":"a,c"}""")))
+    startWireAt(root).awaitTermination()
+    val rows = spark.read.parquet(s"$root/out").filter(col("topic") === "inventory.tagged")
+      .orderBy("pos_key").select("payload_json").collect().map(_.getString(0)).toSeq
+    assert(rows == Seq("""{"id":1,"tags":["a","c"]}""", """{"id":2,"tags":[]}""",
+      """{"id":1,"tags":["b"]}"""), rows)
+    assert(CdcPipeline.loadState(s"$root/st").get.lastBatchId == 1L)
+  }
+
+  test("wire mode: malformed and truncated frames on both topic kinds land in __unparsed") {
+    val root = Files.createTempDirectory("cdc-wire-fuzz").toString
+    val rnd = new scala.util.Random(11)
+    val templates = Seq(
+      schemaEvent(300, "ALTER TABLE `customers` ADD email VARCHAR(128)", "ALTER"),
+      dataEvent("customers", 400, "c", """{"id":"5","name":"eve"}"""))
+    // every strict prefix of a JSON object is malformed; so is the junk
+    def bad(n: Int): Seq[(String, String)] = Seq.fill(n) {
+      val (topic, json) = templates(rnd.nextInt(templates.size))
+      topic -> (rnd.nextInt(4) match {
+        case 0 => rnd.alphanumeric.take(1 + rnd.nextInt(12)).mkString
+        case 1 => """{"payload":]"""
+        case _ => json.take(rnd.nextInt(json.length))
+      })
+    }
+    val first = bad(20)
+    val second = bad(20)
+    assert(first.map(_._1).toSet.size == 2 && second.map(_._1).toSet.size == 2,
+      "both topic kinds must carry bad frames")
+    writeWireSeg(s"$root/wire", Seq(
+      schemaEvent(100, "CREATE TABLE `customers` (id INT PRIMARY KEY, name VARCHAR(64))", "CREATE"),
+      dataEvent("customers", 200, "c", """{"id":"1","name":"bob"}""")) ++ first)
+    writeWireSeg(s"$root/wire", second)
+    startWireAt(root).awaitTermination()
+
+    val out = spark.read.parquet(s"$root/out")
+    def topics(batch: Int) = spark.read.parquet(s"$root/out/batch=$batch")
+      .groupBy("topic").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(topics(0) == Map("inventory.customers" -> 1L, "__unparsed" -> 20L), topics(0))
+    assert(topics(1) == Map("__unparsed" -> 20L), topics(1))
+    assert(out.filter(col("topic") === "inventory.customers")
+      .select("payload_json").head().getString(0) == """{"id":1,"name":"bob"}""")
+    val st = CdcPipeline.loadState(s"$root/st").get
+    assert(st.lastBatchId == 1L && st.position("log_pos") == "200")
+  }
+
   test("a restart compiles no generated code for a segment of the shape it ran before, for both sources") {
     import org.apache.spark.metrics.source.CodegenMetrics
     def compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    def check(name: String, segment: (String, Int) => Unit,
+    // every restart after the first run drains one more segment; the
+    // first run compiled the code all of them need
+    def check(name: String, segments: Int, segment: (String, Int) => Unit,
         start: String => StreamingQuery): Unit = {
       val root = Files.createTempDirectory(s"cdc-codegen-$name").toString
       segment(root, 0)
       start(root).awaitTermination()
-      segment(root, 1)
-      val before = compiled
-      start(root).awaitTermination()
-      assert(compiled == before, s"$name: the restart compiled ${compiled - before} classes again")
+      (1 until segments).foreach { i =>
+        segment(root, i)
+        val before = compiled
+        start(root).awaitTermination()
+        assert(compiled == before,
+          s"$name: the restart over segment $i compiled ${compiled - before} classes again")
+      }
 
       val cleanRoot = Files.createTempDirectory(s"cdc-codegen-$name-clean").toString
-      segment(cleanRoot, 0)
-      segment(cleanRoot, 1)
+      (0 until segments).foreach(segment(cleanRoot, _))
       start(cleanRoot).awaitTermination()
       assertSameOutput(root, cleanRoot)
-      assert(CdcPipeline.loadState(s"$root/st").get.lastBatchId == 1L)
+      assert(CdcPipeline.loadState(s"$root/st").get.lastBatchId == segments - 1L)
     }
     // replay: the sf0.001 events without their DDL, split in two by parity
     val events = Tables.events(spark, sfDir)
       .select("event_id", "user_id", "event_type", "value", "props", "ts_us")
     val noDdl = events.join(graft.cdc.CdcReplay.fromEvents(events)
       .filter(col("kind") =!= "ddl").select("event_id"), Seq("event_id"), "left_semi")
-    check("replay", (root, i) => {
+    check("replay", 2, (root, i) => {
       noDdl.filter(pmod(col("event_id"), lit(2)) === i)
         .coalesce(1).write.mode("append").parquet(s"$root/replay")
       Thread.sleep(100)
     }, startReplayAt)
-    // wire: the first segment creates the table, both carry its inserts
-    check("wire", (root, i) => writeWireSeg(s"$root/wire",
-      (if (i == 0) Seq(schemaEvent(100,
-        "CREATE TABLE `customers` (id INT PRIMARY KEY, name VARCHAR(64))", "CREATE"))
-      else Nil) ++ Seq(
-        dataEvent("customers", 200 + 100 * i, "c", s"""{"id":"${2 * i}","name":"bob"}"""),
-        dataEvent("customers", 250 + 100 * i, "c", s"""{"id":"${2 * i + 1}","name":"amy"}"""))),
-      startWireAt)
+    // wire: the first segment creates the table, the first two carry its
+    // inserts; the third CREATEs two unseen tables (one with a column type
+    // no earlier batch typed) and ALTERs the first between two of its rows
+    def rows(i: Int) = Seq(
+      dataEvent("customers", 200 + 100 * i, "c", s"""{"id":"${2 * i}","name":"bob"}"""),
+      dataEvent("customers", 250 + 100 * i, "c", s"""{"id":"${2 * i + 1}","name":"amy"}"""))
+    check("wire", 3, (root, i) => writeWireSeg(s"$root/wire", i match {
+      case 0 => schemaEvent(100,
+        "CREATE TABLE `customers` (id INT PRIMARY KEY, name VARCHAR(64))", "CREATE") +: rows(0)
+      case 1 => rows(1)
+      case _ => Seq(
+        dataEvent("customers", 500, "c", """{"id":"8","name":"cy"}"""),
+        schemaEvent(510, "CREATE TABLE `orders` (id INT PRIMARY KEY, total DOUBLE)",
+          "CREATE", "orders"),
+        schemaEvent(520, "CREATE TABLE `items` (id INT PRIMARY KEY, sku VARCHAR(16))",
+          "CREATE", "items"),
+        schemaEvent(530, "ALTER TABLE `customers` ADD email VARCHAR(128)", "ALTER"),
+        dataEvent("customers", 540, "c", """{"id":"9","name":"di","email":"d@x.io"}"""),
+        dataEvent("orders", 550, "c", """{"id":"1","total":"2.5"}"""),
+        dataEvent("items", 560, "c", """{"id":"1","sku":"ab-1"}"""))
+    }), startWireAt)
   }
 
   test("state.json keeps a wire position whose file name holds a quote and a backslash") {
